@@ -1,7 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.api.java.UDF1
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph analytics as relational fixpoints — the PageRank
   * face of the family that already includes connected components
@@ -14,16 +20,63 @@ import org.apache.spark.sql.functions._
   * oracle re-derives every iteration's rank table bit-for-bit and the
   * result is reproducible under any cluster layout.
   *
-  * Scale shape per iteration: one equi-join (ranks ⋈ edges on src) and
-  * one hash aggregate (contributions by dst) — both shuffle on node
-  * ids, both map-side combinable; rank state is one long per node.
-  * Edges are pre-partitioned by src and materialized ONCE; each
-  * round's join then reuses that partitioning, and each round's rank
-  * table is localCheckpoint'd so plan depth stays O(1) (the CC/k-means
-  * trick). Reference: Page et al., "The PageRank Citation Ranking",
-  * Stanford InfoLab 1999.
+  * Scale shape of [[pageRankFixed]], [[hitsFixed]] and [[kCoreFixed]]:
+  * Pregel-style rounds (Malewicz et al., SIGMOD 2010). The distinct edge
+  * table is checkpointed ONCE, hash-partitioned by the round's aggregate
+  * key through [[GraftGlue.localCheckpointPartitioned]] (a raw
+  * `localCheckpoint` under AQE forgets the partitioning, and every round
+  * re-shuffled the edges). The node-sized state — rank vector,
+  * hub/authority scores, k-core survivors — stays on the driver between
+  * rounds, behind the loud [[MaxDriverNodes]] bound. Each round
+  * broadcasts it, runs ONE aggregate over the edge checkpoint (no
+  * exchange, no node join), collects the per-node result and destroys
+  * the broadcast: one Spark job per round. Reference: Page et al., "The
+  * PageRank Citation Ranking", Stanford InfoLab 1999.
   */
 object Graph {
+
+  /** Bound on the node-sized state [[pageRankFixed]], [[hitsFixed]] and
+    * [[kCoreFixed]] hold on the driver and broadcast every round (one id
+    * and one long per node, ~16 MB at the bound). A larger graph is
+    * refused loudly; there is no distributed fallback. */
+  val MaxDriverNodes: Int = 1 << 20
+
+  private def boundedNodes(engine: String, rows: Array[Row]): Array[Row] = {
+    require(rows.length <= MaxDriverNodes,
+      s"$engine: ${rows.length} nodes exceed MaxDriverNodes=$MaxDriverNodes, " +
+        "the bound on the node state held on the driver")
+    rows
+  }
+
+  /** The distinct (src, dst) edge set, hash-partitioned by `key` and
+    * checkpointed once with that partitioning kept. The spread's exchange
+    * also serves the distinct, so this is one exchange plus the
+    * checkpoint job, and the caller's edge plan runs exactly once. */
+  private def edgeTable(edges: DataFrame, src: String, dst: String,
+                        key: String): DataFrame = {
+    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
+    require(e.schema("src").dataType == e.schema("dst").dataType,
+      s"src and dst ids must share one type: ${e.schema.simpleString}")
+    GraftGlue.localCheckpointPartitioned(
+      Relational.spread(e, col(key)).distinct())
+  }
+
+  /** One round: broadcast the driver-held `state` (node id → long),
+    * run the aggregate `agg` builds over the lookup it is handed (`miss`
+    * for ids not in `state`) as ONE Spark job, collect it under the
+    * node bound, and destroy the broadcast. */
+  private def pregelRound(engine: String, e: DataFrame, state: Map[Any, Long], miss: Long)
+                   (agg: UserDefinedFunction => DataFrame): Array[Row] = {
+    val bc = e.sparkSession.sparkContext.broadcast(state)
+    val look = udf(((k: Any) => bc.value.getOrElse(k, miss)): UDF1[Any, Long], LongType)
+    try boundedNodes(engine, agg(look).collect()) finally bc.destroy()
+  }
+
+  /** Driver-held per-node rows as (node, `cols`…), ids in the edges' type. */
+  private def nodeFrame(e: DataFrame, rows: Iterable[Row], cols: String*): DataFrame =
+    e.sparkSession.createDataFrame(rows.toSeq.asJava, StructType(
+      e.schema("src").copy(name = "node") +:
+        cols.map(StructField(_, LongType, nullable = false))))
 
   /** `iters` rounds of damped PageRank over directed `edges`
     * (columns `src`, `dst`; duplicate edges are counted once — the
@@ -39,78 +92,44 @@ object Graph {
     * their mass is dropped, not redistributed — the common simplified
     * variant; total mass therefore decays slightly, which is harmless
     * for RANKING and keeps the recurrence strictly local (no global
-    * mass term to agree on). */
-  /** `broadcastRanks` picks the per-round join regime — an explicit
-    * choice because the rank table is a stat-less checkpoint AQE cannot
-    * size:
-    *  - `true` (default): edges partition by dst; each round BROADCASTS
-    *    the node-sized rank table, so the contribution join is
-    *    exchange-free and the groupBy(dst) reuses the checkpoint
-    *    partitioning — zero per-round edge shuffles. Right whenever the
-    *    rank table (one long per node) fits an executor — hundreds of
-    *    millions of nodes.
-    *  - `false`: edges partition by src; each round shuffle-joins the
-    *    rank table on src (aligned — only the node-sized rank moves)
-    *    and pays one dst exchange for the aggregate. The
-    *    billions-of-nodes regime. */
+    * mass term to agree on).
+    *
+    * Scale shape: the edges checkpoint by dst; the set-up collects every
+    * node's out-degree; each round broadcasts rank(u) div outdeg(u) and
+    * sums it per dst in one exchange-free aggregate, and the driver
+    * applies the teleport term with overflow-checked arithmetic. */
   def pageRankFixed(edges: DataFrame, src: String, dst: String, iters: Int,
                     dampNum: Int = 85, dampDen: Int = 100,
-                    scale: Long = 1000000L,
-                    broadcastRanks: Boolean = true): DataFrame = {
+                    scale: Long = 1000000L): DataFrame = {
     require(iters >= 0 && dampNum > 0 && dampDen > dampNum && scale > 0,
       s"bad params: iters=$iters damp=$dampNum/$dampDen scale=$scale")
-    // r18 (guide §2.4): the degree used to be a groupBy + join-back over
-    // a separately checkpointed edge set — two exchanges of the edge
-    // table and TWO eager materialization jobs. A count-over-partition
-    // window computes the same odeg per edge row in the exchange the
-    // plan already pays, so (src, dst, odeg) materializes in ONE job,
-    // pre-partitioned for the chosen regime; the caller's edge-
-    // construction plan still runs exactly once (inside this job).
-    import org.apache.spark.sql.expressions.Window
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .distinct()
-      .withColumn("odeg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst"))).distinct()
-      .localCheckpoint()
-    // r18: the base unit is a DRIVER SOLVE of a one-row aggregate (the
-    // bounded-collect discipline: one long, any scale) instead of a
-    // one-row frame crossJoin-broadcast per iteration — the former
-    // re-ran the count aggregate and a broadcast exchange every round.
-    // Loud failure contract unchanged: scale must exceed the node count
-    // or every rank floors to 0.
-    val n = nodes.count()
+    val e = edgeTable(edges, src, dst, "dst")
+    // (node, outdeg) for every node, sinks at 0: one bounded collect
+    val odeg = boundedNodes("pageRankFixed",
+      e.select(col("src").as("node"), lit(1L).as("o"))
+        .union(e.select(col("dst"), lit(0L)))
+        .groupBy(col("node")).agg(sum(col("o")))
+        .collect()).map(r => r.get(0) -> r.getLong(1)).toMap
+    val n = odeg.size
     require(n > 0, "pageRankFixed: empty graph — no nodes")
     require(scale / n > 0,
       s"pageRankFixed: scale=$scale < node count n=$n — every rank would " +
         "floor to 0; raise scale")
     val u = scale / n // floor division on positive longs == `div`
-    var rank = nodes.select(col("node"), lit(u).as("r"))
-      .localCheckpoint()
+    // exact arithmetic (r18 ADVICE): the teleport constant and every
+    // update must overflow LOUDLY like the ANSI in-plan arithmetic the
+    // oracle mirrors, not wrap silently at extreme `scale`
+    val teleport = Math.multiplyExact((dampDen - dampNum).toLong, u)
+    var rank = odeg.map { case (v, _) => v -> u }
     for (_ <- 1 to iters) {
-      val rankBySrc = rank.withColumnRenamed("node", "src")
-      val contrib = e
-        .join(if (broadcastRanks) broadcast(rankBySrc) else rankBySrc, "src")
-        .select(col("dst"), expr("r div odeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("csum"))
-      rank = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left_outer")
-        .select(col("node"),
-          // multiplyExact (r18 ADVICE): the driver-side teleport constant
-          // must overflow LOUDLY like the in-plan ANSI arithmetic it
-          // replaced, not wrap silently at extreme `scale`
-          expr(s"(${Math.multiplyExact((dampDen - dampNum).toLong, u)}L" +
-            s" + ${dampNum}L * coalesce(csum, 0L)) " +
-            s"div ${dampDen}L").as("r"))
-        // LAZY checkpoint: still truncates the logical plan (O(1) depth)
-        // and caches the round's RDD on first compute, but skips the
-        // per-round eager count() job — the next round's broadcast/join
-        // materializes it, halving scheduled jobs across the loop
-        .localCheckpoint(eager = false)
+      val share = odeg.collect { case (v, d) if d > 0 => v -> rank(v) / d }
+      val csum = pregelRound("pageRankFixed", e, share, 0L)(look =>
+        e.groupBy(col("dst")).agg(sum(look(col("src")))))
+        .map(r => r.get(0) -> r.getLong(1)).toMap
+      rank = rank.map { case (v, _) => v -> Math.addExact(teleport,
+        Math.multiplyExact(dampNum.toLong, csum.getOrElse(v, 0L))) / dampDen }
     }
-    rank.select(col("node"), col("r").as("rank"))
+    nodeFrame(e, rank.map { case (v, r) => Row(v, r) }, "rank")
   }
 
   /** Global triangle census of an undirected graph: nodes, edges,
@@ -286,73 +305,47 @@ object Graph {
     * discipline: scores live in units of `scale`, each half-round is
     *   a_raw(v) = Σ_{u→v} h(u)        then L1-normalize:
     *   a(v)     = (a_raw(v)·scale) div Σ a_raw
-    * (and symmetrically h from a), with the products and the global
-    * sum widened to DECIMAL(38,0) so a_raw·scale cannot wrap a LONG —
-    * `div` on decimals floor-divides back to BIGINT, so every score
-    * table is a long column and the DuckDB oracle replays all rounds
-    * bit-for-bit via HUGEINT ([[hitsOracleCtes]]).
+    * (and symmetrically h from a), with the per-node sums folded in
+    * DECIMAL(38,0) and the normalization in exact BigInteger arithmetic
+    * on the driver, so a_raw·scale cannot wrap a LONG and every score
+    * is a long the DuckDB oracle replays bit-for-bit via HUGEINT
+    * ([[hitsOracleCtes]]).
     *
-    * Scale shape: TWO pre-partitioned edge copies are materialized
-    * once — by dst (authority aggregate) and by src (hub aggregate);
-    * each half-round then broadcasts the node-sized score table and
-    * reuses the matching edge partitioning, so no per-round edge
-    * shuffle (the q128 broadcast regime; at billions of nodes swap the
-    * broadcasts for aligned shuffle joins exactly as pageRankFixed's
-    * `broadcastRanks = false` arm does). The L1 sum is one map-side-
-    * combined aggregate per half-round. Returns (node, auth, hub). */
+    * Scale shape: the distinct edges are checkpointed twice, by dst
+    * (authority sums) and by src (hub sums); each half-round broadcasts
+    * the driver-held score vector and runs one exchange-free aggregate
+    * over the matching copy — one Spark job per half-round, the L1 sum
+    * included. Returns (node, auth, hub). */
   def hitsFixed(edges: DataFrame, src: String, dst: String, iters: Int,
                 scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && scale > 0, s"bad params: iters=$iters scale=$scale")
-    // materialize the deduped edge set ONCE — eByDst/eBySrc/nodes each
-    // trigger their own job, and without this they would re-run the
-    // caller's whole edge-construction plan (often a multi-table join)
-    // three times over
-    val eDistinct = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .distinct().localCheckpoint()
-    val eByDst = Relational.spread(eDistinct, col("dst")).localCheckpoint()
-    val eBySrc = Relational.spread(eDistinct, col("src")).localCheckpoint()
-    val nodes = eDistinct.select(col("src").as("node"))
-      .union(eDistinct.select(col("dst"))).distinct()
-      .localCheckpoint()
-    // SPARSE normalize: a zero-raw node scores (0·scale) div s = 0 and a
-    // zero score contributes nothing to the next half-round's sums, so
-    // the rounds carry only the nonzero rows (on a bipartite graph that
-    // halves every broadcast) and the all-nodes zero fill happens ONCE
-    // at the end — algebraically identical to the oracle's dense rounds
-    def normalize(raw0: DataFrame, scoreCol: String): DataFrame = {
-      // r18: materialize the raw sums ONCE — `raw` feeds BOTH the L1-sum
-      // aggregate and the normalized projection, and un-checkpointed the
-      // edge join + groupBy re-ran twice per half-round (once under the
-      // sum's broadcast, once when the next half-round materialized the
-      // lazy checkpoint). One eager checkpoint halves the half-round.
-      val raw = raw0.localCheckpoint()
-      // Σ raw as decimal; the one-row sum travels as a broadcast
-      val s = raw.agg(sum(col("raw")).as("s"))
-      raw.crossJoin(broadcast(s))
-        .select(col("node"), expr(s"(raw * ${scale}L) div s").as(scoreCol))
-        .localCheckpoint(eager = false)
-    }
-    var hub = nodes.select(col("node"), lit(scale).as("hub"))
-      .localCheckpoint()
-    var auth: DataFrame = null
-    for (_ <- 1 to iters) {
+    val eByDst = edgeTable(edges, src, dst, "dst")
+    val eBySrc = GraftGlue.localCheckpointPartitioned(
+      Relational.spread(eByDst, col("src")))
+    val bigScale = java.math.BigInteger.valueOf(scale)
+    // raw(v) = Σ score(u) over the edges u→v of `e` grouped by `to`,
+    // then L1-normalized; a node with no entry in `score` reads `miss`
+    def half(e: DataFrame, from: String, to: String,
+             score: Map[Any, Long], miss: Long): Map[Any, Long] = {
       // per-node raw sums fold in DECIMAL(38,0) (mirror: HUGEINT) — a
       // high-degree hub at scale 1e9 would pass a LONG near indeg ~9e9
-      val aRaw = eByDst
-        .join(broadcast(hub.withColumnRenamed("node", "src")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("hub").cast("decimal(38,0)")).as("raw"))
-      auth = normalize(aRaw, "auth")
-      val hRaw = eBySrc
-        .join(broadcast(auth.withColumnRenamed("node", "dst")), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(sum(col("auth").cast("decimal(38,0)")).as("raw"))
-      hub = normalize(hRaw, "hub")
+      val raw = pregelRound("hitsFixed", e, score, miss)(look =>
+        e.groupBy(col(to)).agg(sum(look(col(from)).cast("decimal(38,0)"))))
+        .map(r => r.get(0) -> r.getDecimal(1).toBigIntegerExact)
+      val s = raw.foldLeft(java.math.BigInteger.ZERO)(_ add _._2)
+      raw.map { case (v, x) => v -> x.multiply(bigScale).divide(s).longValueExact }.toMap
     }
-    nodes.join(auth, Seq("node"), "left_outer")
-      .join(hub, Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"),
-        coalesce(col("hub"), lit(0L)).as("hub"))
+    // round 1 reads every hub as `scale` (an empty vector, miss = scale);
+    // later, a node missing from a score vector has no edge on that side
+    // and scores 0
+    var hub = Map.empty[Any, Long]
+    var auth = Map.empty[Any, Long]
+    for (i <- 1 to iters) {
+      auth = half(eByDst, "src", "dst", hub, if (i == 1) scale else 0L)
+      hub = half(eBySrc, "dst", "src", auth, 0L)
+    }
+    nodeFrame(eByDst, (auth.keySet ++ hub.keySet).map(v =>
+      Row(v, auth.getOrElse(v, 0L), hub.getOrElse(v, 0L))), "auth", "hub")
   }
 
   /** DuckDB mirror of [[hitsFixed]]: the identical normalize-by-L1
@@ -462,40 +455,31 @@ object Graph {
   /** k-core peeling (Seidman 1983; Batagelj-Zaveršnik): repeatedly
     * delete nodes of degree < k until the k-core remains — the standard
     * dense-subgraph / influential-community extraction. Runs a FIXED
-    * `rounds` of synchronous peeling (each: one degree aggregate + two
-    * semi-join-shaped filters, all equi-joins on the edge set) — the
-    * round count is part of the reproducibility contract, and peeling
-    * converges when a round removes nothing (spec-checked). Edges must
-    * be symmetric; they are dedup'd here. Returns the surviving
-    * subgraph's (node, deg).
+    * `rounds` of synchronous peeling — the round count is part of the
+    * reproducibility contract, and peeling converges when a round
+    * removes nothing (spec-checked). Edges must be symmetric; they are
+    * dedup'd here. Returns the surviving subgraph's (node, deg).
     *
-    * `statePartitions` > 0 coalesces each round's checkpointed
-    * edge/keep state to that many partitions — the per-round task count
-    * then tracks the caller's knowledge of the SURVIVING subgraph's
-    * size instead of `spark.sql.shuffle.partitions` (rounds ×
-    * mostly-empty tasks is pure scheduler overhead when the peeled
-    * graph is small); 0 (default) leaves partitioning to the
-    * session/AQE, the huge-graph regime. */
+    * Scale shape: the distinct edges are checkpointed once by src; the
+    * survivor set stays on the driver. A peel round is one exchange-free
+    * degree aggregate over the edges whose both ends survive, and the
+    * nodes with deg ≥ k survive into the next round; the final degrees
+    * are one more such aggregate. */
   def kCoreFixed(edges: DataFrame, src: String, dst: String, k: Int,
-                 rounds: Int, statePartitions: Int = 0): DataFrame = {
+                 rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1: $k, $rounds")
-    def sized(df: DataFrame): DataFrame =
-      if (statePartitions > 0) df.coalesce(statePartitions) else df
-    var e = sized(edges.select(col(src).as("src"), col(dst).as("dst"))
-      .distinct()).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      // lazy checkpoints: plan depth stays O(1), rounds cache on first
-      // compute, no per-round eager count() job (see pageRankFixed)
-      val keep = sized(e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node")))
-        .localCheckpoint(eager = false)
-      e = sized(e.join(keep.select(col("node").as("src")), "src")
-        .join(keep.select(col("node").as("dst")), "dst")
-        .select(col("src"), col("dst")))
-        .localCheckpoint(eager = false)
-    }
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
+    val e = edgeTable(edges, src, dst, "src")
+    // deg(v) over the edges whose both ends are alive (1) in `alive`;
+    // nodes missing from it read `miss`
+    def degrees(alive: Map[Any, Long], miss: Long): Map[Any, Long] =
+      pregelRound("kCoreFixed", e, alive, miss)(look =>
+        e.filter(look(col("src")) === 1L && look(col("dst")) === 1L)
+          .groupBy(col("src")).agg(count(lit(1))))
+        .map(r => r.get(0) -> r.getLong(1)).toMap
+    var deg = degrees(Map.empty, 1L) // every node alive: the input degrees
+    for (_ <- 1 to rounds)
+      deg = degrees(deg.collect { case (v, d) if d >= k => v -> 1L }, 0L)
+    nodeFrame(e, deg.map { case (v, d) => Row(v, d) }, "deg")
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007): every node
@@ -508,9 +492,9 @@ object Graph {
     * the round count is part of the contract, as with [[kCoreFixed]]).
     * Edges must be symmetric. Returns (node, label).
     *
-    * `statePartitions` as in [[kCoreFixed]]: > 0 sizes each round's
-    * checkpointed label table to the known-small community graph; 0
-    * (default) inherits the session shuffle partitioning. */
+    * `statePartitions` > 0 coalesces each round's checkpointed label
+    * table to that many partitions, sized to the known-small community
+    * graph; 0 (default) inherits the session shuffle partitioning. */
   def labelPropagationFixed(edges: DataFrame, src: String, dst: String,
                             rounds: Int, statePartitions: Int = 0): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
@@ -529,7 +513,7 @@ object Graph {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("lbl")))
-        .localCheckpoint(eager = false) // lazy: see pageRankFixed
+        .localCheckpoint(eager = false) // lazy: O(1) depth, no count() job
     }
     lbl
   }

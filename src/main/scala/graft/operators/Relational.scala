@@ -22,7 +22,11 @@ object Relational {
     * 4.6 s → 0.8 s, q42 MinHash 2.25 → 1.49 s, q95 2.18 → 1.63 s.
     * Count = defaultParallelism, so the same code sizes itself to any
     * cluster; hash partitioning on `cols` is preserved, so downstream
-    * same-key aggregates still need no further exchange. */
+    * same-key aggregates still need no further exchange. Across a
+    * checkpoint that holds only through
+    * [[org.apache.spark.sql.graftglue.GraftGlue.localCheckpointPartitioned]]:
+    * a raw `localCheckpoint` under AQE drops the partitioning, and every
+    * consumer of the checkpoint shuffles again. */
   def spread(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, cols: _*)
 

@@ -769,19 +769,14 @@ object OlapQueries {
     // q128, components q75/q89, triangles q140, BFS q142): peel nodes
     // of degree < 8 from the q128 customer-supplier graph for 6
     // synchronous rounds (Seidman 1983). Each round is one degree
-    // aggregate + two equi-join filters over the shrinking edge set —
-    // cost tracks the SURVIVING graph, and the round count is pinned in
-    // both engines so reproducibility never depends on convergence
+    // aggregate over the edges whose both ends survive, and the round
+    // count is pinned in both engines so reproducibility never depends on convergence
     // (though 6 rounds IS the fixpoint here; spec-checked on sf0.001).
     "q164_kcore" -> Q(
       (s, d) => {
         import s.implicits._
         val both = TradeGraph.edgesBoth(s, d) // shared materialized edges
-        // statePartitions=4: the nation-bounded subgraph is ~10^3 nodes
-        // at any tested SF — per-round tasks track it, not the session's
-        // 32 (drop the arg on an unfiltered 100 TB graph)
-        graft.operators.Graph.kCoreFixed(both, "src", "dst", k = 8, rounds = 6,
-          statePartitions = 4)
+        graft.operators.Graph.kCoreFixed(both, "src", "dst", k = 8, rounds = 6)
           .orderBy($"deg".desc, $"node")
           .limit(50)
       },

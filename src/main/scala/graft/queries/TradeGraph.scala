@@ -61,7 +61,8 @@ object TradeGraph {
           .write.mode("overwrite").parquet(tmp)
       }
     }
-    s.read.parquet(path)
+    // the fixed schema skips the schema-inference job a bare read pays
+    s.read.schema("src STRING, dst STRING").parquet(path)
   }
 
   /** Directed, DISTINCT c→s edges for nation-7/8 customers — the graph
