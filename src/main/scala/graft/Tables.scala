@@ -40,8 +40,9 @@ object Tables {
       .getOrElse("false")
     // mtime+size in the key (r18 ADVICE): a testdata rebuild with a new
     // schema inside one JVM lifetime must re-infer, not serve the stale
-    // schema — same freshness discipline as LayoutKey. The stat is one
-    // local syscall; the footer read it avoids is 10-30 ms.
+    // schema — same freshness discipline as [[graft.queries.Store]]'s
+    // key. The stat is one local syscall; the footer read it avoids is
+    // 10-30 ms.
     val f = new java.io.File(path)
     val schema = schemaCache.computeIfAbsent(
       (flag, s"$path@${f.lastModified}:${f.length}"),

@@ -22,11 +22,6 @@ object VectorFunctions {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Cosine given precomputed norms (compute norms once per vector before
-    * a pair join — halves the flops of the O(n²) inner loop). */
-  def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
-    dot(a, b) / (na * nb)
-
   /** Codegen'd fused cosine (graft.expressions.CosineSimilarity): one
     * generated loop computing dot and both norms. Bit-identical to
     * `cosine` (same accumulation order), ~10× faster in O(n²) pair loops

@@ -57,25 +57,17 @@ object Sources {
     * prunes whole directories BEFORE any file is listed or opened, so a
     * one-month query over a decade of data touches 1/120 of the store
     * (`.explain` shows it as `PartitionFilters`, distinct from row-level
-    * `PushedFilters`). Writes `df` hive-partitioned by `partCols` once;
-    * a committed `_SUCCESS` marker skips the rewrite (the layout content
-    * is a pure function of the input, so reuse is sound — delete the dir
-    * to force a rebuild). Partition columns should be low-cardinality
-    * (date buckets, regions): one directory per value, and at most a few
-    * thousand directories keep listing cheap. */
+    * `PushedFilters`). Writes `df` hive-partitioned by `partCols` once
+    * and publishes it at `path` the way [[graft.queries.Store]] does
+    * (the caller passes a `Store.key`; a published layout is reused —
+    * delete the dir to force a rebuild). Partition columns should be
+    * low-cardinality (date buckets, regions): one directory per value,
+    * and at most a few thousand directories keep listing cheap. */
   def materializePartitioned(spark: SparkSession, df: => DataFrame,
                              path: String, partCols: Seq[String]): DataFrame = {
-    // Hadoop FS probe (not java.io.File): the reuse contract must hold
-    // when `path` is on HDFS/S3A, where a local-file check never matches.
-    // Built in a hidden tmp sibling and published by ONE rename
-    // (Fs.promoteDir — the TradeGraph/MediaSketch discipline): a
-    // concurrent JVM racing the same layout path sees either the whole
-    // partition tree or nothing, never a half-written listing (the
-    // round-14 ADVICE sweep's last build-in-place cache sites)
-    if (!Fs.exists(spark, s"$path/_SUCCESS"))
-      Fs.promoteDir(spark, path, "_SUCCESS") { tmp =>
-        df.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
-      }
+    Fs.promoteDir(spark, path, "_SUCCESS") { tmp =>
+      df.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
+    }
     spark.read.parquet(path)
   }
 

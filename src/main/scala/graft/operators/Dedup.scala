@@ -21,65 +21,12 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Connected components of an undirected pair graph (near-dup edges →
-    * duplicate clusters) by iterative min-label propagation: every node
-    * starts labeled with its own id; each round every node takes the min
-    * label among itself and its neighbors; at the fixpoint each component
-    * carries its minimum member id. The fixpoint is unique — independent
-    * of iteration count, partitioning or join order — so the result is
-    * engine-reproducible (the DuckDB oracle reaches the same labels with
-    * a recursive CTE).
-    *
-    * Scale posture: one equi-join + one hash aggregate per round, each a
-    * single shuffle on the node id; rounds = graph diameter. Near-dup
-    * graphs are unions of small dense clusters (tiny diameter), so this
-    * terminates in a handful of rounds; for adversarial path-shaped
-    * graphs the published alternating large-star/small-star algorithm
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC '14) gets O(log² n) rounds from the same per-round primitives.
-    * Every round is localCheckpoint'd: an iterative self-referential plan
-    * otherwise doubles its lineage each round and drowns the driver in
-    * re-analysis (at production scale, use reliable `checkpoint` so a
-    * lost executor cannot lose a round's blocks).
-    *
-    * `pairs` carries one (id_a, id_b) row per undirected edge; `nodes` is
-    * the id universe (isolated nodes become singleton clusters). Returns
-    * (id, cluster_id). Fails loudly if `maxIter` rounds don't reach the
-    * fixpoint rather than returning a partially-propagated labeling. */
-  def connectedComponents(nodes: DataFrame, id: String, pairs: DataFrame,
-                          maxIter: Int = 50): DataFrame = {
-    val und = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
-    var labels = nodes.select(col(id).as("id"), col(id).as("cluster_id"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIter) {
-      val fromNeighbors = und.join(labels, und("src") === labels("id"))
-        .select(col("dst").as("id"), col("cluster_id"))
-      val next = labels.union(fromNeighbors)
-        .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
-        .localCheckpoint()
-      converged = next
-        .join(labels.withColumnRenamed("cluster_id", "prev"), "id")
-        .filter(col("cluster_id") =!= col("prev"))
-        .isEmpty
-      labels = next
-      round += 1
-    }
-    require(converged, s"connectedComponents: no fixpoint after $maxIter rounds")
-    labels
-  }
-
   /** Connected components by alternating large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC '14) — the adversarial-shape twin of [[connectedComponents]]:
-    * min-label propagation needs rounds = graph diameter, which grinds on
-    * chain-shaped duplicate families; star contraction converges in
-    * O(log² n) rounds on ANY shape, from the same per-round primitives
-    * (one groupBy-min + one equi-join per star operation, each a single
-    * shuffle on the node id).
+    * SoCC '14). Min-label propagation needs rounds = graph diameter,
+    * which grinds on chain-shaped duplicate families; star contraction
+    * converges in O(log² n) rounds on ANY shape, with one shuffle on the
+    * node id per star operation.
     *
     *  - large-star: every node's strictly-larger neighbors connect to the
     *    minimum of its closed neighborhood — after it, all edges point
@@ -88,9 +35,12 @@ object Dedup {
     *    smallest of them — halving chains toward the component minimum.
     *
     * The fixpoint is the star graph centered at each component's minimum
-    * id (the same labels [[connectedComponents]] reaches, so the DuckDB
-    * recursive-CTE oracle verifies both). Returns (id, cluster_id); fails
-    * loudly if `maxIter` alternations don't reach the fixpoint. */
+    * id — the labels min-label propagation reaches, which the DuckDB
+    * recursive-CTE oracles compute. Alternations are localCheckpoint'd,
+    * which is not fault-tolerant. `pairs` holds one (id_a, id_b) row per
+    * undirected edge; `nodes` is the id universe (isolated nodes become
+    * singletons). Returns (id, cluster_id); fails loudly if `maxIter`
+    * alternations don't reach the fixpoint. */
   def connectedComponentsStars(nodes: DataFrame, id: String, pairs: DataFrame,
                                maxIter: Int = 25): DataFrame =
     connectedComponentsStarsWithRounds(nodes, id, pairs, maxIter)._1
@@ -178,14 +128,9 @@ object Dedup {
 
   /** THE clustering entry point for dup pipelines: nodes + undirected
     * pair edges → (id, cluster_id) component labels. Routes to
-    * [[connectedComponentsStars]] so the O(log² n) any-shape algorithm is
-    * the path of least resistance — min-label propagation
-    * ([[connectedComponents]]) silently regresses to diameter rounds on
-    * chain-shaped families, so a caller should have to opt INTO it (it
-    * wins only when the graph is known to be unions of tiny dense
-    * clusters and the ~2-round head start matters). Both reach the same
-    * fixpoint labels (component minimum), so swapping is invisible to
-    * results. */
+    * [[connectedComponentsStars]], the O(log² n) any-shape algorithm:
+    * min-label propagation regresses to diameter rounds on chain-shaped
+    * families. Labels are the component minimum. */
   def cluster(nodes: DataFrame, id: String, pairs: DataFrame,
               maxIter: Int = 25): DataFrame =
     connectedComponentsStars(nodes, id, pairs, maxIter)

@@ -308,30 +308,24 @@ object Similarity {
   }
 
   /** Build-once/query-many IVF index, materialized to parquet at `path`
-    * (the q94 layout discipline — the caller keys `path` on the corpus
-    * identity + mtime, so a regenerated corpus retrains and a live one
-    * never does). At 100 TB the coarse quantizer is trained at INGEST,
-    * one job, like any other index build; every query afterwards reads
-    * two narrow tables — (cell, cf) centroids (kCells rows, broadcast
-    * weight) and (pid, cell) assignments (one int pair per vector) —
-    * instead of re-running Lloyd over the corpus. Returns
+    * and published the way [[graft.queries.Store]] does (the caller
+    * passes a `Store.key`, so a regenerated corpus retrains and a live
+    * one never does). At 100 TB the coarse quantizer is trained at
+    * INGEST, one job, like any other index build; every query afterwards
+    * reads two narrow tables — (cell, cf) centroids (kCells rows,
+    * broadcast weight) and (pid, cell) assignments (one int pair per
+    * vector) — instead of re-running Lloyd over the corpus. Returns
     * (cents, assign) as read back from the materialized store. */
   def materializeIvfIndex(spark: org.apache.spark.sql.SparkSession,
                           corpus: DataFrame, path: String, id: String,
                           vec: String, kCells: Int, iters: Int,
                           scale: Double = 1e6): (DataFrame, DataFrame) = {
-    // assign/_SUCCESS is the completeness probe (written last inside
-    // the tmp build); the whole two-table index is then published by
-    // ONE atomic directory rename (Fs.promoteDir), so concurrent JVMs
-    // racing this cache path never read a half-built index; probed
-    // through Hadoop FS so the lifecycle holds on HDFS/S3A stores too
-    if (!graft.io.Fs.exists(spark, s"$path/assign/_SUCCESS")) {
-      graft.io.Fs.promoteDir(spark, path, "assign/_SUCCESS") { tmp =>
-        val (pts, cents) = kmeansCore(corpus, id, vec, kCells, iters, scale)
-        cents.write.mode("overwrite").parquet(s"$tmp/cents")
-        assignCells(pts, cents).select(col("pid"), col("cell"))
-          .write.mode("overwrite").parquet(s"$tmp/assign")
-      }
+    // assign/_SUCCESS is the completeness marker: written last
+    graft.io.Fs.promoteDir(spark, path, "assign/_SUCCESS") { tmp =>
+      val (pts, cents) = kmeansCore(corpus, id, vec, kCells, iters, scale)
+      cents.write.mode("overwrite").parquet(s"$tmp/cents")
+      assignCells(pts, cents).select(col("pid"), col("cell"))
+        .write.mode("overwrite").parquet(s"$tmp/assign")
     }
     (spark.read.parquet(s"$path/cents"), spark.read.parquet(s"$path/assign"))
   }
@@ -463,26 +457,24 @@ object Similarity {
   /** Materialized IVF-PQ index — the [[materializeIvfIndex]] lifecycle
     * applied to the three PQ tables (coarse centroids, the M residual
     * codebooks, per-candidate codes): trained once at ingest under a
-    * caller-supplied path (key it on the corpus file's mtime + the
-    * quantizer parameters, the q94/q172 layout discipline), then every
-    * ANN query — any nprobe — reads the tables instead of re-running
-    * Lloyd. cand/_SUCCESS is written LAST, so a half-built index is
-    * rebuilt, never served. Materialization moves cost; results are
-    * identical to the train-inline path on the same parameters. */
+    * caller-supplied `Store.key` (its tag names the quantizer
+    * parameters), then every ANN query — any nprobe — reads the tables
+    * instead of re-running Lloyd. cand/_SUCCESS is written LAST, so a
+    * half-built index is rebuilt, never served. Materialization moves
+    * cost; results are identical to the train-inline path on the same
+    * parameters. */
   def materializePqIndex(spark: org.apache.spark.sql.SparkSession,
                          candidates: DataFrame, corpus: DataFrame,
                          path: String, id: String, vec: String,
                          kCells: Int, coarseIters: Int, subspaces: Int,
                          ksub: Int, pqIters: Int, dims: Int,
                          scale: Double = 1e6): (DataFrame, DataFrame, DataFrame) = {
-    if (!graft.io.Fs.exists(spark, s"$path/cand/_SUCCESS")) {
-      graft.io.Fs.promoteDir(spark, path, "cand/_SUCCESS") { tmp =>
-        val (_, cents, codebooks, cand) = pqIndex(candidates, corpus, id, vec,
-          kCells, coarseIters, subspaces, ksub, pqIters, dims, scale)
-        cents.write.mode("overwrite").parquet(s"$tmp/cents")
-        codebooks.write.mode("overwrite").parquet(s"$tmp/codebooks")
-        cand.write.mode("overwrite").parquet(s"$tmp/cand")
-      }
+    graft.io.Fs.promoteDir(spark, path, "cand/_SUCCESS") { tmp =>
+      val (_, cents, codebooks, cand) = pqIndex(candidates, corpus, id, vec,
+        kCells, coarseIters, subspaces, ksub, pqIters, dims, scale)
+      cents.write.mode("overwrite").parquet(s"$tmp/cents")
+      codebooks.write.mode("overwrite").parquet(s"$tmp/codebooks")
+      cand.write.mode("overwrite").parquet(s"$tmp/cand")
     }
     (spark.read.parquet(s"$path/cents"),
       spark.read.parquet(s"$path/codebooks"),

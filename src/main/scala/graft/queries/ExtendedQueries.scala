@@ -778,7 +778,7 @@ object ExtendedQueries {
     "q94_partition_pruned" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "orders", "orders_by_month")
+        val layout = Store.key(d, Seq("orders"), "orders_by_month")
         val pruned = graft.io.Sources.materializePartitioned(s,
             t(s, d, "orders")
               .withColumn("o_month", date_format($"o_orderdate", "yyyy-MM")),
@@ -806,7 +806,7 @@ object ExtendedQueries {
     "q171_events_pruned" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "events", "events_by_day")
+        val layout = Store.key(d, Seq("events"), "events_by_day")
         val pruned = graft.io.Sources.materializePartitioned(s,
             t(s, d, "events")
               .withColumn("e_day", date_format($"ts", "yyyy-MM-dd")),
@@ -837,15 +837,13 @@ object ExtendedQueries {
     "q173_jsonl_roundtrip" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "lineitem", "lineitem_jsonl")
         val base = t(s, d, "lineitem")
           .filter($"l_orderkey" < 1000)
           .select($"l_orderkey", $"l_linenumber", $"l_returnflag",
             $"l_quantity", $"l_extendedprice", $"l_shipdate")
-        if (!graft.io.Fs.exists(s, s"$layout/_SUCCESS")) // atomic publish:
-          graft.io.Fs.promoteDir(s, layout, "_SUCCESS") { tmp => // no torn
-            base.write.mode("overwrite").json(tmp)               // listings
-          }
+        val layout = Store.dir(s, d, Seq("lineitem"), "lineitem_jsonl") { tmp =>
+          base.write.mode("overwrite").json(tmp)
+        }
         graft.io.Sources.jsonLines(s, layout, base.schema)
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n_items"),
@@ -875,15 +873,13 @@ object ExtendedQueries {
     "q174_csv_roundtrip" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "orders", "orders_csv")
         val base = t(s, d, "orders")
           .filter($"o_orderkey" < 4000)
           .select($"o_orderkey", $"o_orderstatus", $"o_totalprice",
             $"o_orderdate", $"o_orderpriority")
-        if (!graft.io.Fs.exists(s, s"$layout/_SUCCESS")) // atomic publish
-          graft.io.Fs.promoteDir(s, layout, "_SUCCESS") { tmp =>
-            base.write.mode("overwrite").option("header", "true").csv(tmp)
-          }
+        val layout = Store.dir(s, d, Seq("orders"), "orders_csv") { tmp =>
+          base.write.mode("overwrite").option("header", "true").csv(tmp)
+        }
         graft.io.Sources.csv(s, layout, base.schema)
           .groupBy($"o_orderstatus")
           .agg(count(lit(1)).as("n_orders"),
@@ -922,7 +918,9 @@ object ExtendedQueries {
       (s, d) => {
         import s.implicits._
         System.setProperty("derby.stream.error.file", "/tmp/derby.log")
-        val dbDir = LayoutKey.dir(d, "lineitem", "lineitem_derby")
+        // ':' → '_': Derby reads a database path's text before a ':' as
+        // a subsubprotocol name and cannot reopen such a database
+        val dbDir = Store.key(d, Seq("lineitem"), "lineitem_derby").replace(':', '_')
         val url = s"jdbc:derby:$dbDir;create=true"
         val marker = s"$dbDir.loaded"
         if (!graft.io.Fs.exists(s, marker)) {
@@ -967,14 +965,12 @@ object ExtendedQueries {
     "q183_orc_roundtrip" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "part", "part_orc")
         val base = t(s, d, "part")
           .filter($"p_size" <= 25)
           .select($"p_partkey", $"p_brand", $"p_type", $"p_size", $"p_retailprice")
-        if (!graft.io.Fs.exists(s, s"$layout/_SUCCESS")) // atomic publish
-          graft.io.Fs.promoteDir(s, layout, "_SUCCESS") { tmp =>
-            base.write.mode("overwrite").orc(tmp)
-          }
+        val layout = Store.dir(s, d, Seq("part"), "part_orc") { tmp =>
+          base.write.mode("overwrite").orc(tmp)
+        }
         graft.io.Sources.orc(s, layout, base.schema)
           .groupBy($"p_brand")
           .agg(count(lit(1)).as("n_parts"),
@@ -1007,18 +1003,17 @@ object ExtendedQueries {
     "q189_schema_evolution" -> Q(
       (s, d) => {
         import s.implicits._
-        val layout = LayoutKey.dir(d, "orders", "orders_evolved")
-        if (!graft.io.Fs.exists(s, s"$layout/_done.marker")) {
-          graft.io.Fs.promoteDir(s, layout, "_done.marker") { tmp =>
-            t(s, d, "orders").filter($"o_orderkey" < 2000)
-              .select($"o_orderkey", $"o_totalprice")
-              .write.mode("overwrite").parquet(s"$tmp/v=1")
-            t(s, d, "orders")
-              .filter($"o_orderkey" >= 2000 && $"o_orderkey" < 4000)
-              .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
-              .write.mode("overwrite").parquet(s"$tmp/v=2")
-            graft.io.Fs.touch(s, s"$tmp/_done.marker")
-          }
+        val layout = Store.dir(s, d, Seq("orders"), "orders_evolved") { tmp =>
+          t(s, d, "orders").filter($"o_orderkey" < 2000)
+            .select($"o_orderkey", $"o_totalprice")
+            .write.mode("overwrite").parquet(s"$tmp/v=1")
+          t(s, d, "orders")
+            .filter($"o_orderkey" >= 2000 && $"o_orderkey" < 4000)
+            .select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
+            .write.mode("overwrite").parquet(s"$tmp/v=2")
+          // the generation writes mark their own subdirs; the store's
+          // marker goes last, at the root
+          graft.io.Fs.touch(s, s"$tmp/_SUCCESS")
         }
         s.read.option("mergeSchema", "true").parquet(layout)
           .groupBy(coalesce($"o_orderstatus", lit("pre-v2")).as("status"))

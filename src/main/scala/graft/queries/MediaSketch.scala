@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * both need every document image's hash, and before this each re-ran
   * the PNG encode → decode → sample → pack pipeline per query. The
   * TradeGraph discipline replayed on the media modality: hashes are
-  * computed ONCE per testdata generation (mtime-keyed via [[LayoutKey]],
-  * published atomically via `Fs.promoteDir`, `_SUCCESS`-guarded) and
+  * computed ONCE per testdata generation (a [[Store]]; its doc states
+  * the key, version and publish rules every store here follows) and
   * every consumer reads the parquet — at 100 TB this is exactly how
   * perceptual dedup runs in production: hash at INGEST, N analyses over
   * the sketch store (the same shape [[graft.streaming.StreamPipeline
@@ -25,18 +25,15 @@ object MediaSketch {
 
   /** Materialized (media_id, c0, c1, c2, c3) for every document row. */
   def dhash(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "dhash_sketch")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        implicit val sp: SparkSession = s
-        import s.implicits._
-        val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
-          graft.Tables(s, d, "documents").select($"doc_id"), "doc_id")
-        graft.multimodal.Multimodal.sampleGrayGrid(pngs)
-          .select($"media_id" +:
-            graft.multimodal.Multimodal.dhashChunks($"grays"): _*)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "dhash_sketch") { tmp =>
+      implicit val sp: SparkSession = s
+      import s.implicits._
+      val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
+        graft.Tables(s, d, "documents").select($"doc_id"), "doc_id")
+      graft.multimodal.Multimodal.sampleGrayGrid(pngs)
+        .select($"media_id" +:
+          graft.multimodal.Multimodal.dhashChunks($"grays"): _*)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -48,8 +45,7 @@ object MediaSketch {
     * comparison bits whose SIXTEEN 16-bit bands are simultaneously
     * sparse at corpus density AND pigeonhole-guaranteed to d ≤ 15 —
     * strictly more recall range than the 8-band regime ever had. The
-    * wide fixture images (20×18 base) cover the larger grid; same
-    * mtime-keyed, atomically-promoted store discipline. */
+    * wide fixture images (20×18 base) cover the larger grid. */
   /** The AUDIO twin (media_id, c0..c3): the spectral fingerprint of
     * every document's WAV clip, materialized once per testdata
     * generation like [[dhash]] — q265's near-dup pairs and q268's
@@ -61,18 +57,15 @@ object MediaSketch {
     * the consumers' DuckDB oracles still re-derive hashes from the
     * closed-form integer spectra, validating this build end to end. */
   def spectral(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "spectral_sketch")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        implicit val sp: SparkSession = s
-        import s.implicits._
-        val wavs = graft.multimodal.Multimodal.encodeSpectralWavs(
-          graft.Tables(s, d, "documents").select($"doc_id"), "doc_id")
-        graft.multimodal.Multimodal.decodeFrameSpectra(wavs)
-          .select($"media_id" +:
-            graft.multimodal.Multimodal.spectralHashChunks($"p6", $"p12"): _*)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "spectral_sketch") { tmp =>
+      implicit val sp: SparkSession = s
+      import s.implicits._
+      val wavs = graft.multimodal.Multimodal.encodeSpectralWavs(
+        graft.Tables(s, d, "documents").select($"doc_id"), "doc_id")
+      graft.multimodal.Multimodal.decodeFrameSpectra(wavs)
+        .select($"media_id" +:
+          graft.multimodal.Multimodal.spectralHashChunks($"p6", $"p12"): _*)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -90,30 +83,27 @@ object MediaSketch {
     * 2nd of 8), p=1 clips the first frame, p=2 swaps frame 0 for a
     * brightness variant (distinct media id space 3·(s·8+f)). */
   def videoTokens(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "video_tok")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        implicit val sp: SparkSession = s
-        import s.implicits._
-        val vf = graft.Tables(s, d, "documents").select($"doc_id".as("video"))
-          .withColumn("p", $"video" % 3)
-          .withColumn("f", explode(sequence(lit(0), lit(6), lit(2))))
-          .filter(!($"p" === 1 && $"f" === 0)) // p=1: clipped first frame
-          // div, not `/`: Column `/` on longs is DOUBLE division (q252)
-          .withColumn("mid",
-            lit(3L) * (expr("video div 3") * 8 + $"f")
-              + when($"p" === 2 && $"f" === 0, 1L).otherwise(0L))
-          .localCheckpoint() // feeds the distinct-codec pass AND the join
-        val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
-          vf.select($"mid".as("doc_id")).distinct(), "doc_id")
-        val grid = graft.multimodal.Multimodal.sampleGrayGrid(pngs)
-        val sketch = grid.select($"media_id".as("mid"),
-          concat_ws(":",
-            graft.multimodal.Multimodal.dhashChunks($"grays"): _*).as("tok"))
-        vf.join(sketch, "mid")
-          .groupBy($"video").agg(collect_set($"tok").as("toks"))
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "video_tok") { tmp =>
+      implicit val sp: SparkSession = s
+      import s.implicits._
+      val vf = graft.Tables(s, d, "documents").select($"doc_id".as("video"))
+        .withColumn("p", $"video" % 3)
+        .withColumn("f", explode(sequence(lit(0), lit(6), lit(2))))
+        .filter(!($"p" === 1 && $"f" === 0)) // p=1: clipped first frame
+        // div, not `/`: Column `/` on longs is DOUBLE division (q252)
+        .withColumn("mid",
+          lit(3L) * (expr("video div 3") * 8 + $"f")
+            + when($"p" === 2 && $"f" === 0, 1L).otherwise(0L))
+        .localCheckpoint() // feeds the distinct-codec pass AND the join
+      val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
+        vf.select($"mid".as("doc_id")).distinct(), "doc_id")
+      val grid = graft.multimodal.Multimodal.sampleGrayGrid(pngs)
+      val sketch = grid.select($"media_id".as("mid"),
+        concat_ws(":",
+          graft.multimodal.Multimodal.dhashChunks($"grays"): _*).as("tok"))
+      vf.join(sketch, "mid")
+        .groupBy($"video").agg(collect_set($"tok").as("toks"))
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -126,7 +116,7 @@ object MediaSketch {
     * quantity that is fixed per testdata generation. Built ONCE via
     * the registered banded operator (8 bands, stop-cap 200 — the
     * exact q255 parameters, so reading the store IS reading q255's
-    * answer), promoted atomically, consumed by both. At 100 TB this
+    * answer), consumed by both. At 100 TB this
     * is how a perceptual-dedup service runs: the pair graph is an
     * INGEST artifact, maintained incrementally (the
     * imageDedupSuppressWriter already does exactly this with verified
@@ -135,13 +125,10 @@ object MediaSketch {
     * arithmetic + exact all-pairs distance, so the store build stays
     * hash-verified end to end each round. */
   def dhashPairs(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "dhash_pairs_d7")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        graft.operators.Dedup.hammingBandedPairs(dhash(s, d), "media_id",
-            maxDist = 7, nBands = 8, maxBucket = 200)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "dhash_pairs_d7") { tmp =>
+      graft.operators.Dedup.hammingBandedPairs(dhash(s, d), "media_id",
+          maxDist = 7, nBands = 8, maxBucket = 200)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -155,31 +142,25 @@ object MediaSketch {
     * store-filtered q283 would inherit this build's stop-drops and
     * fake that evidence (the q271/q274 stay-live lesson). */
   def dhash256Pairs(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "dhash256_pairs_d15")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        graft.operators.Dedup.hammingBandedPairsChunks(dhash256(s, d),
-            "media_id", maxDist = 15, nChunks = 16, maxBucket = 200)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "dhash256_pairs_d15") { tmp =>
+      graft.operators.Dedup.hammingBandedPairsChunks(dhash256(s, d),
+          "media_id", maxDist = 15, nChunks = 16, maxBucket = 200)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
 
   def dhash256(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "dhash256_sketch")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        implicit val sp: SparkSession = s
-        import s.implicits._
-        val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
-          graft.Tables(s, d, "documents").select($"doc_id"), "doc_id",
-          wBase = 20, hBase = 18)
-        graft.multimodal.Multimodal.sampleGrayGrid(pngs, gw = 17, gh = 16)
-          .select($"media_id" +:
-            graft.multimodal.Multimodal.dhashChunksGrid($"grays", 17, 16): _*)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "dhash256_sketch") { tmp =>
+      implicit val sp: SparkSession = s
+      import s.implicits._
+      val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
+        graft.Tables(s, d, "documents").select($"doc_id"), "doc_id",
+        wBase = 20, hBase = 18)
+      graft.multimodal.Multimodal.sampleGrayGrid(pngs, gw = 17, gh = 16)
+        .select($"media_id" +:
+          graft.multimodal.Multimodal.dhashChunksGrid($"grays", 17, 16): _*)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }

@@ -19,44 +19,51 @@ final case class Q(
     oracle: Option[String],
     doc: String = "")
 
-/** The ONE mtime-keyed layout-cache path builder (previously copy-pasted
-  * at every materialized layout/index call site): caches key on the
-  * SOURCE parquet's path + lastModified, so a regenerated source
-  * invalidates every derived layout (q94 discipline). java.io.File mtime
-  * probing is local-FS only — a real deployment swaps this for the
-  * Hadoop FileSystem mtime ([[graft.io.Fs]]) and a durable cache root. */
-object LayoutKey {
-  def dir(d: String, table: String, tag: String): String = {
-    val src = new java.io.File(s"$d/$table.parquet")
-    "/tmp/graft_layout/" +
-      s"${src.getPath.replaceAll("[^A-Za-z0-9._-]", "_")}_${src.lastModified}" +
-      s"/$tag"
-  }
-
-  /** Multi-source variant: the cache key folds in EVERY input table's
-    * mtime (the ScaleStress replica discipline — "any table, not just
-    * lineitem"), so regenerating ANY of them invalidates the layout.
-    * A single-table key here would silently serve edges derived from
-    * stale sibling tables (round-13 review catch on TradeGraph). */
-  def dir(d: String, tables: Seq[String], tag: String): String = {
+/** Every persisted store's one home: the key format and the publish
+  * path. A store is a pure function of its source tables, built once
+  * and read by every consumer (TextSketch, MediaSketch, TradeGraph, the
+  * q94/q171 layouts, the q172/PQ indexes, the q173–q189 round trips).
+  *
+  * Key: `<root>/<head table path>_<table:mtime-…>/<tag>`, with root
+  * `graft_layout` under `/tmp`; every store sits exactly two levels
+  * under the root. The key folds EVERY source table's name and mtime,
+  * so regenerating any of them — not just the head table — invalidates
+  * the store. Names sit beside mtimes because a bare mtime list
+  * collides when a caller swaps one sibling for another written by the
+  * same datagen run; the ':' keeps (name, mtime) pairs unambiguous for
+  * names ending in digits. java.io lastModified is 0 for a missing
+  * file, so the key still changes once the file appears. java.io.File
+  * mtime probing is local-FS only — a real deployment swaps in the
+  * Hadoop FileSystem mtime and a durable root.
+  *
+  * Version: the tag is the ONLY scheme/code input to the key. A change
+  * to what a store's build writes must bump its tag (the `_mN` suffix,
+  * e.g. `winnow_fp_k4w4_m1`); nothing else retires an older store.
+  *
+  * Publish: [[dir]] builds into a hidden tmp sibling and publishes it
+  * with one rename through [[graft.io.Fs.promoteDir]], guarded by the
+  * build's `_SUCCESS` marker: a published store is never rebuilt, a
+  * torn one is rebuilt, and no reader sees a half-built listing. */
+object Store {
+  def key(d: String, tables: Seq[String], tag: String): String = {
     require(tables.nonEmpty, "need at least one source table")
     val head = new java.io.File(s"$d/${tables.head}.parquet")
-    // fold each table's NAME into the stamp alongside its mtime: a
-    // bare mtime list would collide when a caller later swaps one
-    // sibling table for another written by the same datagen run
-    // (identical mtimes → identical key → stale layout served).
-    // The ':' delimiter keeps (name, mtime) pairs unambiguous — a
-    // table name ending in digits would otherwise let two distinct
-    // pairs concatenate to the same stamp (round-13 ADVICE).
-    // Note java.io lastModified is 0 for a MISSING file — the key
-    // still differs once the file appears, so absence never pins a
-    // stale layout past the table's creation.
     val stamp = tables
       .map(t => s"$t:${new java.io.File(s"$d/$t.parquet").lastModified}")
       .mkString("-")
     "/tmp/graft_layout/" +
-      s"${head.getPath.replaceAll("[^A-Za-z0-9._-]", "_")}_$stamp" +
-      s"/$tag"
+      s"${head.getPath.replaceAll("[^A-Za-z0-9._-]", "_")}_$stamp/$tag"
+  }
+
+  /** [[key]] plus build-and-publish: runs `build(tmp)` only when the
+    * store is not already published (the build must write `_SUCCESS`
+    * into `tmp`, as every Spark file write does) and returns the
+    * published dir. */
+  def dir(s: SparkSession, d: String, tables: Seq[String], tag: String)
+         (build: String => Unit): String = {
+    val path = key(d, tables, tag)
+    graft.io.Fs.promoteDir(s, path, "_SUCCESS")(build)
+    path
   }
 }
 

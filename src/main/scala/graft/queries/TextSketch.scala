@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every document's winnowed fingerprints, and before this each re-ran
   * the gram-md5 → key-pack → window-min selection per query (the
   * dominant ~2–4 s of each). Fingerprints are computed ONCE per
-  * testdata generation (mtime-keyed via [[LayoutKey]], published
-  * atomically via `Fs.promoteDir`, `_SUCCESS`-guarded) and every
-  * consumer reads the parquet — at 100 TB this is exactly how a
+  * testdata generation (a [[Store]]; its doc states the key, version
+  * and publish rules every store here follows) and every consumer
+  * reads the parquet — at 100 TB this is exactly how a
   * fingerprint index runs in production: winnow at INGEST, N analyses
   * over the store (the same shape
   * [[graft.streaming.StreamPipeline.winnowDedupSuppressWriter]]
@@ -36,15 +36,12 @@ object TextSketch {
     * whose scheme differs from the call's (k, w). The `_m1` tag suffix
     * retires pre-marker store generations. */
   def winnowFps(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "winnow_fp_k4w4_m1")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Dedup.winnowedFingerprints(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", $"text", k = 4, w = 4)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "winnow_fp_k4w4_m1") { tmp =>
+      import s.implicits._
+      graft.operators.Dedup.winnowedFingerprints(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", $"text", k = 4, w = 4)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -69,18 +66,14 @@ object TextSketch {
     * reads this store while q287's id-bounded slice stays on the LIVE
     * operator (the registered live face); the oracle re-derives every
     * boundary and chunk md5 from the text, validating the build each
-    * round. Same mtime-keyed, atomically-promoted discipline as the
-    * other stores. */
+    * round. */
   def cdcChunkTable(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "cdc_chunks_w8d64")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Curation.cdcChunks(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", "text", w = 8, den = 64)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "cdc_chunks_w8d64") { tmp =>
+      import s.implicits._
+      graft.operators.Curation.cdcChunks(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", "text", w = 8, den = 64)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -98,15 +91,12 @@ object TextSketch {
     * md5/XXH64 closed forms — the store is hash-validated end-to-end
     * each round. */
   def minhashSigs(s: SparkSession, d: String, scheme: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", s"minhash_${scheme}_k64")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Dedup.minhashDocSignatures(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", "text", k = 64, scheme = scheme)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), s"minhash_${scheme}_k64") { tmp =>
+      import s.implicits._
+      graft.operators.Dedup.minhashDocSignatures(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", "text", k = 64, scheme = scheme)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -118,15 +108,12 @@ object TextSketch {
     * doc-subset consumers restrict with a filter/semi-join. `sh_set`
     * carries the shingle_words_n4 scheme marker. */
   def shingleSets4(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "shingle_sets_n4")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Dedup.wordShingleSets(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", $"text", n = 4)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "shingle_sets_n4") { tmp =>
+      import s.implicits._
+      graft.operators.Dedup.wordShingleSets(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", $"text", n = 4)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
@@ -139,30 +126,24 @@ object TextSketch {
     * face recomputes df over the restricted doc space, so keeper
     * consumers see keeper frequencies. */
   def tfPostings4(s: SparkSession, d: String): DataFrame = {
-    val path = LayoutKey.dir(d, "documents", "tf_postings_n4")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Dedup.wordTf(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", "text", n = 4)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "tf_postings_n4") { tmp =>
+      import s.implicits._
+      graft.operators.Dedup.wordTf(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", "text", n = 4)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }
 
   def substringWh(s: SparkSession, d: String): DataFrame = {
     // wh carries graft.scheme = substr_w40 (see winnowFps's note)
-    val path = LayoutKey.dir(d, "documents", "substring_wh_w40_m1")
-    if (!graft.io.Fs.exists(s, s"$path/_SUCCESS")) {
-      graft.io.Fs.promoteDir(s, path, "_SUCCESS") { tmp =>
-        import s.implicits._
-        graft.operators.Dedup.substringWindowHashes(
-            graft.Tables(s, d, "documents").select($"doc_id", $"text"),
-            "doc_id", "text", width = 40)
-          .write.mode("overwrite").parquet(tmp)
-      }
+    val path = Store.dir(s, d, Seq("documents"), "substring_wh_w40_m1") { tmp =>
+      import s.implicits._
+      graft.operators.Dedup.substringWindowHashes(
+          graft.Tables(s, d, "documents").select($"doc_id", $"text"),
+          "doc_id", "text", width = 40)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(path)
   }

@@ -15,10 +15,10 @@ object VectorQueries {
 
   private def emb(s: SparkSession, d: String): DataFrame = Tables(s, d, "embeddings")
 
-  /** mtime-keyed layout dir for the shared q96/q115 PQ index (the q172
+  /** [[Store]] key of the shared q96/q115 PQ index (the q172
     * discipline: a retouched corpus file invalidates the index). */
   private def pqLayout(d: String): String =
-    LayoutKey.dir(d, "embeddings", "pq_k8_i3_m8_ks16_i2")
+    Store.key(d, Seq("embeddings"), "pq_k8_i3_m8_ks16_i2")
 
   /** DuckDB double-precision dot product over the 64 dims. */
   private def sqlDot(a: String, b: String): String =
@@ -419,7 +419,7 @@ object VectorQueries {
       (s, d) => {
         import s.implicits._
         val e = emb(s, d)
-        val layout = LayoutKey.dir(d, "embeddings", "ivf_k8_i3")
+        val layout = Store.key(d, Seq("embeddings"), "ivf_k8_i3")
         val (cents, assign) = Similarity.materializeIvfIndex(
           s, e, layout, "vec_id", "embedding", kCells = 8, iters = 3)
         Similarity.ivfTopKFromIndex(

@@ -136,4 +136,52 @@ class IoSpec extends SparkSpec {
     assert(e.getMessage.contains("did not write its marker"), e.getMessage)
     assert(!Fs.exists(spark, path2), "miswired build must not publish")
   }
+
+  private val storeTables = Seq("lineitem", "orders", "customer")
+
+  /** A private copy of three sf0.001 tables: the Store tests move their
+    * mtimes, which must not touch the shared testdata. */
+  private def storeSources(): String = {
+    val d = Files.createTempDirectory("store_src")
+    storeTables.foreach(t => Files.copy(
+      java.nio.file.Paths.get(sf("sf0.001"), s"$t.parquet"), d.resolve(s"$t.parquet")))
+    d.toString
+  }
+
+  test("Store.dir builds once per key; a new mtime on ANY source table rebuilds") {
+    import graft.io.Fs
+    import graft.queries.Store
+    val d = storeSources()
+    var builds = 0
+    def dir(): String = Store.dir(spark, d, storeTables, "probe") { tmp =>
+      builds += 1
+      Fs.touch(spark, s"$tmp/_SUCCESS")
+    }
+    val keys = scala.collection.mutable.ArrayBuffer(dir())
+    try {
+      assert(dir() == keys.head && builds == 1, "a published store must not rebuild")
+      for ((t, i) <- storeTables.zipWithIndex) {
+        val f = new java.io.File(s"$d/$t.parquet")
+        assert(f.setLastModified(f.lastModified + 10000L))
+        keys += dir()
+        assert(keys.distinct.size == i + 2, s"touching $t must give a new key")
+        assert(builds == i + 2, s"touching $t must rebuild the store")
+        assert(Fs.exists(spark, s"${keys.last}/_SUCCESS"))
+      }
+    } finally keys.foreach(k => Fs.deleteRecursive(spark, new java.io.File(k).getParent))
+  }
+
+  test("Store.key is the multi-source form, one store dir under the root") {
+    import graft.queries.Store
+    val d = storeSources()
+    Seq("lineitem" -> 1000000000000L, "orders" -> 1100000000000L,
+        "customer" -> 1200000000000L).foreach { case (t, ms) =>
+      assert(new java.io.File(s"$d/$t.parquet").setLastModified(ms))
+    }
+    val key = Store.key(d, storeTables, "trade_edges")
+    val head = s"$d/lineitem.parquet".replaceAll("[^A-Za-z0-9._-]", "_")
+    assert(key == s"/tmp/graft_layout/${head}_lineitem:1000000000000-" +
+      "orders:1100000000000-customer:1200000000000/trade_edges")
+    assert(new java.io.File(key).getParentFile.getParent == "/tmp/graft_layout")
+  }
 }

@@ -264,33 +264,7 @@ class TextDedupSpec extends SparkSpec {
     assert(banded == exact, "xx64 banding must lose no pair within the radius")
   }
 
-  test("connectedComponents labels transitive near-dup chains and singletons") {
-    // graph: 0-1, 1-2 (chain: 0 and 2 never pair directly), 5-6; 9 isolated
-    val nodes = Seq(0L, 1L, 2L, 5L, 6L, 9L).toDF("id")
-    val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(nodes, "id", pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(cc == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
-  }
-
-  test("connectedComponents converges on a path graph (worst-case diameter)") {
-    val n = 12
-    val nodes = (0L until n.toLong).toDF("id")
-    val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(nodes, "id", pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(cc.values.toSet == Set(0L), "a single path is one component labeled 0")
-  }
-
-  test("connectedComponents with no edges is the identity labeling") {
-    val nodes = Seq(3L, 7L).toDF("id")
-    val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(nodes, "id", none)
-      .as[(Long, Long)].collect().toMap
-    assert(cc == Map(3L -> 3L, 7L -> 7L))
-  }
-
-  test("star contraction matches min-label labels on a mixed graph") {
+  test("star contraction labels chains, pairs and singletons by component minimum") {
     val nodes = Seq(0L, 1L, 2L, 5L, 6L, 9L).toDF("id")
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
     val stars = Dedup.connectedComponentsStars(nodes, "id", pairs)
@@ -329,15 +303,11 @@ class TextDedupSpec extends SparkSpec {
   }
 
   test("star contraction needs O(log^2 n) alternations where min-label needs diameter") {
-    // a 64-node path: min-label propagation would need ~63 rounds (its
-    // default maxIter=50 gives up); star contraction halves chain length
-    // per alternation pair
+    // a 64-node path: min-label propagation would need ~63 rounds; star
+    // contraction halves chain length per alternation pair
     val n = 64
     val nodes = (0L until n.toLong).toDF("id")
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(nodes, "id", pairs)
-    }
     val (cc, rounds) = Dedup.connectedComponentsStarsWithRounds(nodes, "id", pairs)
     val labels = cc.as[(Long, Long)].collect().toMap
     assert(labels.values.toSet == Set(0L), "single path is one component labeled 0")

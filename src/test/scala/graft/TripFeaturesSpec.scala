@@ -45,6 +45,15 @@ class TripFeaturesSpec extends SparkSpec {
     assert(r(1).getDouble(0) == 0.0)
   }
 
+  test("E12 speed in mph; zero duration -> 0, null -> null") {
+    val r = Seq[(Double, Option[Double])]((3.0, Some(15.0)), (1.5, Some(0.0)), (1.0, None))
+      .toDF("dist", "dur")
+      .select(TripFeatures.speedMph($"dist", $"dur")).collect()
+    assert(r(0).getDouble(0) == 12.0)
+    assert(r(1).getDouble(0) == 0.0, "a zero-duration trip must map to 0, not throw")
+    assert(r(2).isNullAt(0))
+  }
+
   test("E7 time-of-day buckets partition all 24 hours; null hour -> null") {
     val buckets = spark.range(24)
       .select(TripFeatures.timeOfDay($"id").as("b")).as[String].collect()
