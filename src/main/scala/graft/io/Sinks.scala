@@ -33,13 +33,6 @@ object Sinks {
     isoRendered.select(to_json(struct(isoRendered.columns.map(col): _*)).as("value"))
   }
 
-  /** K1 — write the JSON frame to a Kafka topic (production path). */
-  def kafkaJson(df: DataFrame, servers: String, topic: String): Unit =
-    toKafkaJson(df).write.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("topic", topic)
-      .save()
-
   /** K2 — JDBC append (the foreachBatch writer's production target).
     * Spark's JDBC dialect emits the CREATE TABLE DDL on first write —
     * the reference's 30-line hand-rolled information_schema probe +

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.StructType
 
 /** Source factories for every ingest the reference performs (SURVEY.md
   * §2.1 S1-S6), config-driven so tests can exercise the file-based ones
-  * and production supplies real endpoints for Kafka/JDBC.
+  * and production supplies real endpoints for JDBC.
   */
 object Sources {
 
@@ -70,12 +70,4 @@ object Sources {
     }
     spark.read.parquet(path)
   }
-
-  /** S2 (batch flavor) — bounded Kafka read for backfills. */
-  def kafkaBatch(spark: SparkSession, servers: String, topic: String): DataFrame =
-    spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .load()
 }

@@ -1,16 +1,16 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
-import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, OneHotEncoderModel, StandardScaler, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, RandomForestRegressionModel, RandomForestRegressor}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, concat_ws, conv, lit, md5, pmod, substring}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{abs, col, concat_ws, conv, count, lit, md5, pmod, substring, sum, var_samp, when}
 
 /** The reference's 5-stage fare-prediction pipeline (sparkML.py:70-171),
   * 1:1 in native Scala Spark ML — StringIndexer → OneHotEncoder →
-  * VectorAssembler → StandardScaler → regressor — plus the three
-  * RegressionEvaluators and feature importances.
+  * VectorAssembler → StandardScaler → regressor — plus the reference's
+  * three RegressionEvaluator metrics, computed as one aggregate
+  * ([[FarePipeline.scores]]), and feature importances.
   *
   * Parameter parity (persisted metadata under savedModels/stages/):
   * handleInvalid="keep" on both the indexer and assembler, default
@@ -40,6 +40,10 @@ final case class FareConfig(
     modelKind: String = "rf") {
   def categoricalCols: Seq[String] = categoricalCol +: extraCategoricalCols
 }
+
+/** Size and regression quality of one group of scored rows: `rows`
+  * counts every row, the metrics only the labeled ones. */
+private[graft] final case class Scores(rows: Long, rmse: Double, mae: Double, r2: Double)
 
 final case class FareMetrics(
     trainRmse: Double, trainMae: Double, trainR2: Double,
@@ -88,11 +92,28 @@ object FarePipeline {
     new Pipeline().setStages((indexers :+ encoder :+ assembler :+ scaler :+ model).toArray)
   }
 
-  private def evaluate(pred: DataFrame, label: String, metric: String): Double =
-    new RegressionEvaluator()
-      .setLabelCol(label).setPredictionCol("prediction")
-      .setMetricName(metric)
-      .evaluate(pred)
+  /** [[Scores]] of `prediction` against `label` for each value of the
+    * integer `group`, all from ONE aggregate, with the formulas of
+    * Spark's `RegressionMetrics` at unit weight: RMSE = √mean(e²),
+    * MAE = mean|e| and R² = 1 − SSerr / (var_samp(y)·(n − 1)), n being
+    * the labeled rows. A null label leaves its row out of the metrics
+    * but not out of `rows`; a group with no labeled row, or no row at
+    * all, scores NaN. Callers tag groups with literals, so the collect
+    * is bounded by their count. */
+  private[graft] def scores(pred: DataFrame, label: String,
+                            group: Column = lit(0)): Map[Int, Scores] = {
+    val y = col(label).cast("double")
+    val e = y - col("prediction")
+    pred.groupBy(group.as("__group"))
+      .agg(count(lit(1)), count(e), sum(e * e), sum(abs(e)), var_samp(when(e.isNotNull, y)))
+      .collect().map { r =>
+        def d(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+        val n = r.getLong(2).toDouble
+        val sse = d(3)
+        r.getInt(0) -> Scores(r.getLong(1), math.sqrt(sse / n), d(4) / n,
+          1 - sse / (d(5) * (n - 1)))
+      }.toMap.withDefaultValue(Scores(0L, Double.NaN, Double.NaN, Double.NaN))
+  }
 
   /** Feature names aligned with the assembled vector: numeric columns,
     * then each categorical's one-hot slots (categorySizes from the fitted
@@ -111,10 +132,11 @@ object FarePipeline {
   def fitEval(df: DataFrame, cfg: FareConfig): (PipelineModel, FareMetrics) = {
     val Array(train, test) = df.randomSplit(Array(0.8, 0.2), cfg.seed)
     val model = build(cfg).fit(train)
-    // persist predictions: three evaluators per split would otherwise
-    // re-run split + full model scoring six times instead of twice
-    val pTrain = model.transform(train).persist()
-    val pTest = model.transform(test).persist()
+    // both splits are scored once, in the one aggregate of all six metrics
+    def tagged(split: DataFrame, tag: Int) = model.transform(split)
+      .select(col(cfg.labelCol), col("prediction"), lit(tag).as("__split"))
+    val s = scores(tagged(train, 0).unionByName(tagged(test, 1)), cfg.labelCol,
+      col("__split"))
     val importances = model.stages.last match {
       case m: RandomForestRegressionModel => m.featureImportances.toArray.toSeq
       case m: GBTRegressionModel => m.featureImportances.toArray.toSeq
@@ -126,15 +148,8 @@ object FarePipeline {
     require(importances.isEmpty || names.size == importances.size,
       s"feature name count ${names.size} != importance vector ${importances.size}")
     val imps = names.zip(importances).sortBy(-_._2)
-    val metrics = FareMetrics(
-      evaluate(pTrain, cfg.labelCol, "rmse"),
-      evaluate(pTrain, cfg.labelCol, "mae"),
-      evaluate(pTrain, cfg.labelCol, "r2"),
-      evaluate(pTest, cfg.labelCol, "rmse"),
-      evaluate(pTest, cfg.labelCol, "mae"),
-      evaluate(pTest, cfg.labelCol, "r2"),
-      imps)
-    pTrain.unpersist(); pTest.unpersist()
+    val metrics = FareMetrics(s(0).rmse, s(0).mae, s(0).r2,
+      s(1).rmse, s(1).mae, s(1).r2, imps)
     (model, metrics)
   }
 
@@ -152,20 +167,26 @@ object FarePipeline {
   def crossValidate(df: DataFrame, cfg: FareConfig,
                     folds: Int = 5): CvMetrics = {
     require(folds >= 2, s"folds must be >= 2: $folds")
-    val keyCols = (cfg.numericCols ++ cfg.categoricalCols :+ cfg.labelCol)
-      .map(c => col(c).cast("string"))
-    val withFold = df.withColumn("__fold",
-        pmod(conv(substring(md5(concat_ws(":", keyCols: _*)), 1, 15), 16, 10)
-          .cast("long"), lit(folds.toLong)))
+    val withFold = withFolds(df, cfg, folds)
       .localCheckpoint() // assignment materializes once for all k fits
     val rmses = (0 until folds).map { f =>
       val model = build(cfg).fit(withFold.filter(col("__fold") =!= f))
-      evaluate(model.transform(withFold.filter(col("__fold") === f)),
-        cfg.labelCol, "rmse")
+      scores(model.transform(withFold.filter(col("__fold") === f)),
+        cfg.labelCol)(0).rmse
     }
     val mean = rmses.sum / folds
     val sd = math.sqrt(rmses.map(r => (r - mean) * (r - mean)).sum / (folds - 1))
     CvMetrics(rmses, mean, sd)
+  }
+
+  /** `df` plus its [[crossValidate]] fold, `__fold` in [0, folds): an md5
+    * of the feature+label tuple. */
+  private[graft] def withFolds(df: DataFrame, cfg: FareConfig, folds: Int): DataFrame = {
+    val keyCols = (cfg.numericCols ++ cfg.categoricalCols :+ cfg.labelCol)
+      .map(c => col(c).cast("string"))
+    df.withColumn("__fold",
+      pmod(conv(substring(md5(concat_ws(":", keyCols: _*)), 1, 15), 16, 10)
+        .cast("long"), lit(folds.toLong)))
   }
 
   /** One JSON line for a fit: params + the six metrics + importances —

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.TripFeatures
@@ -18,8 +18,11 @@ import graft.functions.TripFeatures
   *    WholeStageCodegen span per micro-batch;
   *  - checkpointing is configured (the reference had none — restarts
   *    lost offsets);
-  *  - the micro-batch is persisted before count+write (the reference
-  *    recomputed the batch for its pre-write count).
+  *  - no pre-write count (the reference counted every batch only to log
+  *    the number; `StreamingQueryProgress.numInputRows` carries it) and
+  *    no blanket cache: a single-read writer computes its batch once,
+  *    inside its own write job, and only a writer that reads its batch
+  *    twice persists it.
   */
 object StreamPipeline {
 
@@ -43,14 +46,6 @@ object StreamPipeline {
       TripFeatures.enrich(decoded, pickupCol, dropoffCol), "passenger_count")
   }
 
-  /** Kafka streaming source factory (S2). Compile-checked; no broker in
-    * the build env — tests drive the same transforms via MemoryStream. */
-  def kafkaSource(spark: SparkSession, servers: String, topic: String): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", servers)
-      .option("subscribe", topic)
-      .load()
-
   /** Watermarked tumbling-window aggregate — the stateful-streaming
     * extension (§2.8: absent in the reference). State is bounded by the
     * watermark; keys = (window, event_type). */
@@ -63,24 +58,23 @@ object StreamPipeline {
         col("n"), col("sum_value"))
 
   /** foreachBatch sink with reference semantics: create-if-absent target,
-    * cache the batch (the reference double-computed it), count for the
-    * log, append, catch-log-continue (sparkConsumer.py:103-163). The
-    * writer is injected so JDBC/parquet/kafka targets share the loop. */
+    * append, catch-log-continue (sparkConsumer.py:103-163). The writer is
+    * injected so JDBC/parquet targets share the loop. The batch is
+    * neither counted nor cached here: a writer that reads its batch once
+    * computes it inside its own write job, and a writer that reads it
+    * twice persists it itself. */
   def foreachBatchSink(df: DataFrame, checkpointDir: String,
                        writer: (DataFrame, Long) => Unit): StreamingQuery =
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val b = batch.persist()
-        try {
-          b.count() // observability, now on the cached plan
-          writer(b.toDF(), id)
-        } catch {
+        try writer(batch.toDF(), id)
+        catch {
           case e: Exception =>
             // parity: log and drop the batch rather than kill the query
             System.err.println(s"[stream] batch $id failed: ${e.getMessage}")
-        } finally b.unpersist()
+        }
       }
       .start()
 
@@ -187,49 +181,50 @@ object StreamPipeline {
           s"upsert writer fenced: snapshot $snapshotDir is at epoch $curEpoch, " +
             s"this writer holds epoch $writerEpoch — a newer writer owns the " +
             "snapshot; refusing to commit stale state")
-      val b = batch.withColumn("__bucket", bucketOf)
-      // ≤ nBuckets ints — bounded driver state, not a data collect
-      val dirty = b.select(col("__bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (dirty.nonEmpty) {
-        val livePaths = dirty.toSeq.flatMap(manifest.get).map(r => s"$snapshotDir/$r")
-        val current =
-          if (livePaths.isEmpty) None
-          else Some(spark.read.parquet(livePaths: _*).withColumn("__bucket", bucketOf))
-        val all = current.map(b.unionByName(_)).getOrElse(b)
-        val w = Window.partitionBy(col(keyCol))
-          .orderBy(orderCols.map(c => col(c).desc): _*)
-        // never write into a dir the live snapshot references: a prior
-        // attempt of this batchId may have committed already, and
-        // mode(overwrite) would delete its files under the merge plan
-        val referenced = manifest.values.map(_.takeWhile(_ != '/')).toSet
-        val mergeDir = Iterator.from(0).map(a => f"merge-$batchId%06d-a$a")
-          .filterNot(referenced).next()
-        all.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .repartition(col("__bucket")) // one file per bucket, not per task
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"$snapshotDir/$mergeDir")
-        val updated = manifest ++
-          dirty.map(bk => bk -> s"$mergeDir/__bucket=$bk").toMap
-        val tmp = java.nio.file.Paths.get(snapshotDir, "_MANIFEST.tmp")
-        java.nio.file.Files.writeString(tmp,
-          (s"#epoch=$writerEpoch" +:
-            updated.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }).mkString("\n"))
-        java.nio.file.Files.move(tmp, manifestPath(snapshotDir),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // GC: a merge dir dies only when no bucket references it anymore
-        val live = updated.values.map(_.takeWhile(_ != '/')).toSet
-        Option(new java.io.File(snapshotDir).listFiles).getOrElse(Array.empty)
-          .filter(f => f.isDirectory && f.getName.startsWith("merge-") && !live(f.getName))
-          .foreach(deleteRecursively)
-      }
+      // the batch is read twice (the dirty-bucket collect, then the merge
+      // write): persist it so it is computed once
+      val b = batch.withColumn("__bucket", bucketOf).persist()
+      try {
+        // ≤ nBuckets ints — bounded driver state, not a data collect
+        val dirty = b.select(col("__bucket")).distinct()
+          .collect().map(_.getInt(0)).sorted
+        if (dirty.nonEmpty) {
+          val livePaths = dirty.toSeq.flatMap(manifest.get).map(r => s"$snapshotDir/$r")
+          val current =
+            if (livePaths.isEmpty) None
+            else Some(spark.read.parquet(livePaths: _*).withColumn("__bucket", bucketOf))
+          val all = current.map(b.unionByName(_)).getOrElse(b)
+          val w = Window.partitionBy(col(keyCol))
+            .orderBy(orderCols.map(c => col(c).desc): _*)
+          // never write into a dir the live snapshot references: a prior
+          // attempt of this batchId may have committed already, and
+          // mode(overwrite) would delete its files under the merge plan
+          val referenced = manifest.values.map(_.takeWhile(_ != '/')).toSet
+          val mergeDir = Iterator.from(0).map(a => f"merge-$batchId%06d-a$a")
+            .filterNot(referenced).next()
+          all.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__rn")
+            .repartition(col("__bucket")) // one file per bucket, not per task
+            .write.mode("overwrite").partitionBy("__bucket")
+            .parquet(s"$snapshotDir/$mergeDir")
+          val updated = manifest ++
+            dirty.map(bk => bk -> s"$mergeDir/__bucket=$bk").toMap
+          val tmp = java.nio.file.Paths.get(snapshotDir, "_MANIFEST.tmp")
+          java.nio.file.Files.writeString(tmp,
+            (s"#epoch=$writerEpoch" +:
+              updated.toSeq.sortBy(_._1).map { case (k, v) => s"$k\t$v" }).mkString("\n"))
+          java.nio.file.Files.move(tmp, manifestPath(snapshotDir),
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          // GC: a merge dir dies only when no bucket references it anymore
+          val live = updated.values.map(_.takeWhile(_ != '/')).toSet
+          Option(new java.io.File(snapshotDir).listFiles).getOrElse(Array.empty)
+            .filter(f => f.isDirectory && f.getName.startsWith("merge-") && !live(f.getName))
+            .foreach(deleteRecursively)
+        }
+      } finally b.unpersist(): Unit
     }
   }
-
-  /** Micro-batch trigger constant used by production starts. */
-  val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
   /** Streaming exact dedup with bounded state: drops re-deliveries of the
     * same key seen within the watermark horizon, then state for expired
@@ -525,21 +520,24 @@ object StreamPipeline {
           if (committed.isEmpty) None
           else Some(spark.read.parquet(committed: _*)
             .select(col("band_hash").as("wh")))
-        // ONE window-hash pass per batch: the stride-1 md5 stream is
-        // the writer's dominant cost, and both the scrub and the index
-        // delta need it — materialize once, feed both (round-15
-        // self-review catch; previously each job re-ran the explode)
-        val wins = Dedup.substringWindowHashes(
-            batch.select(col(id), col(text)), id, text, width)
-          .localCheckpoint()
-        Dedup.substringScrub(batch.select(col(id), col(text)),
-            id, text, width, seen, Some(wins))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
-        wins
-          .select(col(id), lit(0).as("band_idx"), col("wh").as("band_hash"))
-          .distinct()
-          .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$name")
-        Fs.touch(spark, s"$outDir/$name.commit")
+        // the batch is read twice (the window hashes, then the scrub):
+        // persist it so it is computed once
+        val b = batch.select(col(id), col(text)).persist()
+        try {
+          // ONE window-hash pass per batch: the stride-1 md5 stream is
+          // the writer's dominant cost, and both the scrub and the index
+          // delta need it — materialize once, feed both (round-15
+          // self-review catch; previously each job re-ran the explode)
+          val wins = Dedup.substringWindowHashes(b, id, text, width)
+            .localCheckpoint()
+          Dedup.substringScrub(b, id, text, width, seen, Some(wins))
+            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
+          wins
+            .select(col(id), lit(0).as("band_idx"), col("wh").as("band_hash"))
+            .distinct()
+            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$name")
+          Fs.touch(spark, s"$outDir/$name.commit")
+        } finally b.unpersist(): Unit
       }
     }
 
@@ -816,21 +814,26 @@ object StreamPipeline {
       val spark = batch.sparkSession
       val name = f"batch-$batchId%06d"
       if (!Fs.exists(spark, s"$outDir/$name.commit")) {
-        val buckets = bucketsOf(batch).persist()
-        // committed index = newest promoted base + deltas whose OUT
-        // marker exists and that the base doesn't cover (never the
-        // in-flight batch: its marker isn't there yet)
-        val committed = committedIndexPaths(spark, indexDir, outDir)
-        val hitExisting =
-          if (committed.isEmpty) buckets.filter(lit(false)).select(col(id))
-          else hitExistingOf(buckets, spark.read.parquet(committed: _*))
-        val suppressed = hitExisting.union(hitWithinOf(buckets)).distinct()
-        val survivors = batch.join(suppressed, Seq(id), "left_anti").persist()
-        survivors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
-        buckets.join(survivors.select(col(id)), Seq(id), "left_semi")
-          .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$name")
-        Fs.touch(spark, s"$outDir/$name.commit")
-        survivors.unpersist(); buckets.unpersist()
+        // the batch is read twice (its buckets, then the survivors'
+        // anti-join): persist it so it is computed once
+        val b = batch.persist()
+        try {
+          val buckets = bucketsOf(b).persist()
+          // committed index = newest promoted base + deltas whose OUT
+          // marker exists and that the base doesn't cover (never the
+          // in-flight batch: its marker isn't there yet)
+          val committed = committedIndexPaths(spark, indexDir, outDir)
+          val hitExisting =
+            if (committed.isEmpty) buckets.filter(lit(false)).select(col(id))
+            else hitExistingOf(buckets, spark.read.parquet(committed: _*))
+          val suppressed = hitExisting.union(hitWithinOf(buckets)).distinct()
+          val survivors = b.join(suppressed, Seq(id), "left_anti").persist()
+          survivors.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
+          buckets.join(survivors.select(col(id)), Seq(id), "left_semi")
+            .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/$name")
+          Fs.touch(spark, s"$outDir/$name.commit")
+          survivors.unpersist(); buckets.unpersist()
+        } finally b.unpersist(): Unit
       }
     }
 

@@ -26,8 +26,8 @@ import graft.ml.{FareConfig, FarePipeline}
   * reference's scale and hyperparameters.
   *
   * Timed section mirrors the reference's boundaries: parquet read
-  * (plays the JDBC read) → fitEval (split + fit + 3 evaluators × 2
-  * splits + importances) → model save. Fixture generation is untimed
+  * (plays the JDBC read) → fitEval (split + fit + one aggregate of the
+  * 3 metrics × 2 splits + importances) → model save. Fixture generation is untimed
   * (the reference's data was already in Postgres when its clock
   * started). Emits MLBENCH.json (one JSON object) for the judge. */
 object MlBench {

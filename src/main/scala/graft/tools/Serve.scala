@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
 import graft.functions.TripFeatures
-import graft.ml.{FareConfig, FareMetrics, FarePipeline}
+import graft.ml.{FareConfig, FareMetrics, FarePipeline, Scores}
 
 /** Batch serving entry point — the engine-side equivalent of the
   * reference's prediction service (deployment/main.py:17-76 and the
@@ -20,8 +20,10 @@ import graft.ml.{FareConfig, FareMetrics, FarePipeline}
   * Output: `<outDir>/scored` parquet — every input column plus
   * `prediction`. When the labeled column `fare_amount` is present (the
   * reference's upload page shows actuals next to predictions), a
-  * metrics JSON line (RMSE/MAE/R² of the served batch) is appended to
-  * `<outDir>/metrics.jsonl` via [[FarePipeline.appendMetrics]]. */
+  * metrics JSON line (RMSE/MAE/R² of the served batch's labeled rows)
+  * is appended to `<outDir>/metrics.jsonl` via
+  * [[FarePipeline.appendMetrics]]; those metrics and the scored row
+  * count come from one aggregate ([[FarePipeline.scores]]). */
 object Serve {
 
   def main(args: Array[String]): Unit = {
@@ -61,20 +63,14 @@ object Serve {
       scored.write.mode("overwrite").parquet(s"$outDir/scored")
       if (raw.columns.contains("fare_amount")) {
         // unlabeled uploads still get scored; only labeled rows are judged
-        val labeled = scored.filter(col("fare_amount").isNotNull)
-          .withColumn("fare_amount", col("fare_amount").cast("double"))
-        val Seq(rmse, mae, r2) = Seq("rmse", "mae", "r2").map { m =>
-          new org.apache.spark.ml.evaluation.RegressionEvaluator()
-            .setLabelCol("fare_amount").setPredictionCol("prediction")
-            .setMetricName(m).evaluate(labeled)
-        }
+        val Scores(n, rmse, mae, r2) = FarePipeline.scores(scored, "fare_amount")(0)
         // served-batch metrics fill the test slots; train slots are NaN
         // (no training happened here) — consumers key on "model":"served"
         FarePipeline.appendMetrics(s"$outDir/metrics.jsonl",
           FareConfig("fare_amount", "", Nil, modelKind = "served"),
           FareMetrics(Double.NaN, Double.NaN, Double.NaN, rmse, mae, r2, Nil))
-      }
-      scored.count()
+        n
+      } else scored.count()
     } finally { scored.unpersist(): Unit }
   }
 }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.evaluation.RegressionEvaluator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ml.{FareConfig, FarePipeline}
@@ -39,6 +41,24 @@ class FarePipelineSpec extends SparkSpec {
 
   private lazy val (model, metrics) = FarePipeline.fitEval(trips, cfg)
 
+  /** Spark's own evaluator, the reference the one-aggregate metrics of
+    * [[FarePipeline.scores]] must reproduce. */
+  private def oracle(pred: DataFrame, label: String, metric: String): Double =
+    new RegressionEvaluator().setLabelCol(label).setPredictionCol("prediction")
+      .setMetricName(metric).evaluate(pred)
+
+  private def assertOracle(got: Double, want: Double, what: String): Unit =
+    assert(math.abs(got - want) <= 1e-12 * math.abs(want), s"$what: $got, evaluator $want")
+
+  test("fitEval's six metrics equal RegressionEvaluator on each split") {
+    val Array(train, test) = trips.randomSplit(Array(0.8, 0.2), cfg.seed)
+    val m = metrics
+    for ((split, got) <- Seq(train -> Seq(m.trainRmse, m.trainMae, m.trainR2),
+                             test -> Seq(m.testRmse, m.testMae, m.testR2));
+         (metric, g) <- Seq("rmse", "mae", "r2").zip(got))
+      assertOracle(g, oracle(model.transform(split), cfg.labelCol, metric), metric)
+  }
+
   test("pipeline has the reference's 5 stages") {
     assert(model.stages.length == 5)
     val names = model.stages.map(_.getClass.getSimpleName).toSeq
@@ -74,6 +94,12 @@ class FarePipelineSpec extends SparkSpec {
     // md5 folds + fixed seed: bit-identical on a second run
     val cv2 = FarePipeline.crossValidate(trips, fast, folds = 3)
     assert(cv2 == cv, "CV must be deterministic end-to-end")
+    val folded = FarePipeline.withFolds(trips, fast, 3).localCheckpoint()
+    for ((got, f) <- cv.foldRmse.zipWithIndex) {
+      val m = FarePipeline.build(fast).fit(folded.filter($"__fold" =!= f))
+      assertOracle(got, oracle(m.transform(folded.filter($"__fold" === f)), fast.labelCol,
+        "rmse"), s"fold $f rmse")
+    }
   }
 
   test("serving path (S6): CSV upload -> impute -> transform -> (fare, prediction)") {
@@ -163,15 +189,23 @@ class FarePipelineSpec extends SparkSpec {
     val modelDir = s"$base/model"
     model.write.overwrite().save(modelDir)
     val csvDir = s"$base/upload"
-    trips.limit(40).write.option("header", "true").csv(csvDir)
+    // one null-label row: scored and counted, left out of the metrics
+    trips.limit(39)
+      .unionByName(trips.limit(1).withColumn("fare_amount", lit(null).cast("double")))
+      .write.option("header", "true").csv(csvDir)
     val n = graft.tools.Serve.serve(spark, modelDir, csvDir, s"$base/out")
     assert(n == 40)
     val scored = spark.read.parquet(s"$base/out/scored")
     assert(scored.columns.contains("prediction") && scored.count() == 40)
     val logged = spark.read.json(s"$base/out/metrics.jsonl")
-    val row = logged.select($"model", $"test_rmse").as[(String, Double)].collect()
+    val row = logged.select($"model", $"test_rmse", $"test_mae", $"test_r2")
+      .as[(String, Double, Double, Double)].collect()
     assert(row.length == 1 && row(0)._1 == "served" && row(0)._2 < 2.5,
       s"served-batch metrics line must carry the batch RMSE: ${row.toSeq}")
+    val labeled = scored.filter($"fare_amount".isNotNull)
+    assert(labeled.count() == 39)
+    for ((metric, got) <- Seq("rmse" -> row(0)._2, "mae" -> row(0)._3, "r2" -> row(0)._4))
+      assertOracle(got, oracle(labeled, "fare_amount", metric), metric)
   }
 
   test("model save/load round-trips (K5)") {

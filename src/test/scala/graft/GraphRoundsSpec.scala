@@ -1,9 +1,5 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.graftglue.ListenerGlue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -55,22 +51,6 @@ class GraphRoundsSpec extends SparkSpec {
     assert(ck.count() == 400)
   }
 
-  /** Jobs `body` schedules, with their call sites for the failure message. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val jobs = ArrayBuffer[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        jobs += e.stageInfos.map(_.details.linesIterator
-          .find(_.contains("graft.operators")).getOrElse("?")).mkString(" | ")
-      }
-    }
-    ListenerGlue.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerGlue.drain(sc) } finally sc.removeSparkListener(l)
-    jobs.synchronized(jobs.toSeq)
-  }
-
   test("PageRank, HITS and k-core schedule set-up jobs plus one job per round") {
     val d = sf("sf0.001")
     val both = TradeGraph.edgesBoth(spark, d) // builds the store if missing
@@ -87,7 +67,7 @@ class GraphRoundsSpec extends SparkSpec {
       ("kCoreFixed", checkpoint, 6,
         () => Graph.kCoreFixed(both, "src", "dst", k = 2, rounds = 6)))
     for ((engine, setup, rounds, run) <- cases) {
-      val jobs = jobsOf { assert(run().collect().nonEmpty, s"$engine returned nothing") }
+      val jobs = jobsOf("graft.operators") { assert(run().collect().nonEmpty, s"$engine returned nothing") }
       assert(jobs.length <= setup + rounds + 1,
         s"$engine scheduled ${jobs.length} jobs, bound ${setup + rounds + 1}:\n" +
           jobs.mkString("\n"))

@@ -1,5 +1,9 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.graftglue.ListenerGlue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,4 +22,21 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Jobs `body` schedules, each named by the first call-site line of
+    * its stages that contains `site`, for the failure message. */
+  def jobsOf(site: String)(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val jobs = ArrayBuffer[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += e.stageInfos.map(_.details.linesIterator
+          .find(_.contains(site)).getOrElse("?")).mkString(" | ")
+      }
+    }
+    ListenerGlue.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerGlue.drain(sc) } finally sc.removeSparkListener(l)
+    jobs.synchronized(jobs.toSeq)
+  }
 }

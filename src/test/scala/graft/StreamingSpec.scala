@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,6 +52,54 @@ class StreamingSpec extends SparkSpec {
     val sunk = spark.read.parquet(outDir)
     assert(sunk.count() == 2, "one surviving row per micro-batch, appended")
     assert(sunk.columns.contains("fare_per_mile"))
+  }
+
+  /** One valid trip whose fare tells which micro-batch carried it. */
+  private def trip(fare: Int) =
+    s"""{"tpep_pickup_datetime":"2024-05-01T08:30:00","tpep_dropoff_datetime":"2024-05-01T08:45:30","passenger_count":2,"trip_distance":3.0,"fare_amount":$fare}"""
+
+  /** Streams one micro-batch per message group through
+    * `foreachBatchSink` into `writer(outDir)`. Returns the fares that
+    * landed in `outDir` and the jobs each micro-batch ran. */
+  private def sinkBatches(raw: DataFrame => DataFrame,
+                          writer: String => (DataFrame, Long) => Unit,
+                          batches: Seq[Seq[String]]): (Seq[Double], Seq[Seq[String]]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[String]
+    val outDir = Files.createTempDirectory("stream_out").toString + "/t"
+    val ckpt = Files.createTempDirectory("stream_ckpt").toString
+    val q = StreamPipeline.foreachBatchSink(
+      StreamPipeline.consumerTransform(raw(stream.toDF()), tripSchema),
+      ckpt, writer(outDir))
+    val jobs = try batches.zipWithIndex.map { case (msgs, i) =>
+      val js = jobsOf("graft.") { stream.addData(msgs: _*); q.processAllAvailable() }
+      assert(q.isActive, s"the query must survive batch $i")
+      js
+    } finally q.stop()
+    (spark.read.parquet(outDir).select($"fare_amount").as[Double].collect().sorted.toSeq, jobs)
+  }
+
+  test("foreachBatchSink runs one job per micro-batch: the single-read writer's own") {
+    val (fares, jobs) = sinkBatches(identity, StreamPipeline.parquetAppendWriter,
+      (0 until 3).map(i => Seq(trip(i))))
+    assert(fares == Seq(0.0, 1.0, 2.0))
+    assert(jobs.forall(_.length == 1), jobs.map(_.mkString("\n")).mkString("\n--- next batch ---\n"))
+  }
+
+  test("foreachBatchSink drops the batch its writer fails and keeps the query running") {
+    val (fares, _) = sinkBatches(identity, out => {
+      val append = StreamPipeline.parquetAppendWriter(out)
+      (b, id) => if (id == 1) throw new IllegalStateException("sink down") else append(b, id)
+    }, Seq(Seq(trip(0)), Seq(trip(1)), Seq(trip(2))))
+    assert(fares == Seq(0.0, 2.0))
+  }
+
+  test("a batch whose transform throws lands no rows, and the next batch lands") {
+    val poisoned = (raw: DataFrame) => raw.withColumn("value",
+      when($"value" === "poison", raise_error(lit("poison message"))).otherwise($"value"))
+    val (fares, _) = sinkBatches(poisoned, StreamPipeline.parquetAppendWriter,
+      Seq(Seq(trip(0)), Seq(trip(1), "poison"), Seq(trip(2))))
+    assert(fares == Seq(0.0, 2.0))
   }
 
   test("watermarked tumbling window emits per-window counts") {
