@@ -33,6 +33,19 @@ object Sinks {
     isoRendered.select(to_json(struct(isoRendered.columns.map(col): _*)).as("value"))
   }
 
+  /** `s` as a quoted JSON string: backslash, quote and EVERY control
+    * char (< 0x20) escaped — a tab or CR left raw in a query's SQL or a
+    * model name breaks the reader's `json.load` of the whole file. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** K2 — JDBC append (the foreachBatch writer's production target).
     * Spark's JDBC dialect emits the CREATE TABLE DDL on first write —
     * the reference's 30-line hand-rolled information_schema probe +

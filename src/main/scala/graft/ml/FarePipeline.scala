@@ -6,6 +6,8 @@ import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, RandomF
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{abs, col, concat_ws, conv, count, lit, md5, pmod, substring, sum, var_samp, when}
 
+import graft.io.Sinks.jsonString
+
 /** The reference's 5-stage fare-prediction pipeline (sparkML.py:70-171),
   * 1:1 in native Scala Spark ML — StringIndexer → OneHotEncoder →
   * VectorAssembler → StandardScaler → regressor — plus the reference's
@@ -195,17 +197,11 @@ object FarePipeline {
     * declares the tracking *server* out of scope, this is the artifact).
     * Stable key order, so lines diff cleanly across runs. */
   def metricsJson(cfg: FareConfig, m: FareMetrics): String = {
-    def js(x: String) = "\"" + x.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => f"\\u${c.toInt}%04x" // control chars break JSONL
-      case c => c.toString
-    } + "\""
     // NaN/Infinity are not JSON — absent metric slots serialize as null
     def num(d: Double) = if (d.isNaN || d.isInfinite) "null" else d.toString
     val imps = m.importances
-      .map { case (n, v) => s"[${js(n)},${num(v)}]" }.mkString("[", ",", "]")
-    s"""{"model":${js(cfg.modelKind)},"label":${js(cfg.labelCol)},""" +
+      .map { case (n, v) => s"[${jsonString(n)},${num(v)}]" }.mkString("[", ",", "]")
+    s"""{"model":${jsonString(cfg.modelKind)},"label":${jsonString(cfg.labelCol)},""" +
       s""""num_trees":${cfg.numTrees},"max_depth":${cfg.maxDepth},""" +
       s""""seed":${cfg.seed},""" +
       s""""train_rmse":${num(m.trainRmse)},"train_mae":${num(m.trainMae)},"train_r2":${num(m.trainR2)},""" +

@@ -21,7 +21,9 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Connected components by alternating large-star/small-star contraction
+  /** THE clustering entry point for dup pipelines: nodes + undirected
+    * pair edges → (id, cluster_id) component labels, by alternating
+    * large-star/small-star contraction
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC '14). Min-label propagation needs rounds = graph diameter,
     * which grinds on chain-shaped duplicate families; star contraction
@@ -41,16 +43,15 @@ object Dedup {
     * undirected edge; `nodes` is the id universe (isolated nodes become
     * singletons). Returns (id, cluster_id); fails loudly if `maxIter`
     * alternations don't reach the fixpoint. */
-  def connectedComponentsStars(nodes: DataFrame, id: String, pairs: DataFrame,
-                               maxIter: Int = 25): DataFrame =
-    connectedComponentsStarsWithRounds(nodes, id, pairs, maxIter)._1
+  def cluster(nodes: DataFrame, id: String, pairs: DataFrame,
+              maxIter: Int = 25): DataFrame =
+    clusterWithRounds(nodes, id, pairs, maxIter)._1
 
-  /** [[connectedComponentsStars]] plus the alternation count it took —
-    * exposed so scale tests can pin the O(log² n) round bound (a 64-node
-    * path converges in ~6 alternations here vs ~63 min-label rounds). */
-  def connectedComponentsStarsWithRounds(nodes: DataFrame, id: String,
-                                         pairs: DataFrame, maxIter: Int = 25)
-      : (DataFrame, Int) = {
+  /** [[cluster]] plus the alternation count it took — exposed so scale
+    * tests can pin the O(log² n) round bound (a 64-node path converges
+    * in ~6 alternations here vs ~63 min-label rounds). */
+  def clusterWithRounds(nodes: DataFrame, id: String, pairs: DataFrame,
+                        maxIter: Int = 25): (DataFrame, Int) = {
     // Cheap convergence signature: (|edges|, Σ xxhash64(u,v) mod p) in ONE
     // aggregate over the already-materialized round output — an unchanged
     // round is detected without any `except` (which costs a full shuffle +
@@ -118,22 +119,13 @@ object Dedup {
       round += 1
     }
     require(converged,
-      s"connectedComponentsStars: no fixpoint after $maxIter alternations")
+      s"cluster: no fixpoint after $maxIter alternations")
     val labels = nodes.select(col(id).as("id"))
       .join(edges.groupBy(col("u")).agg(min(col("v")).as("cluster_id"))
         .withColumnRenamed("u", "id"), Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
     (labels, round)
   }
-
-  /** THE clustering entry point for dup pipelines: nodes + undirected
-    * pair edges → (id, cluster_id) component labels. Routes to
-    * [[connectedComponentsStars]], the O(log² n) any-shape algorithm:
-    * min-label propagation regresses to diameter rounds on chain-shaped
-    * families. Labels are the component minimum. */
-  def cluster(nodes: DataFrame, id: String, pairs: DataFrame,
-              maxIter: Int = 25): DataFrame =
-    connectedComponentsStars(nodes, id, pairs, maxIter)
 
   /** Driver-solved twin of [[cluster]] for PROVABLY BOUNDED slices (r18
     * optimization): when the node set is structurally capped by the
@@ -146,7 +138,7 @@ object Dedup {
     * data-scaled graphs use [[cluster]]. Ids must be integral (long/int)
     * — the only id shape the bounded callers use. Returns (id,
     * cluster_id) LONG columns, labels == the component minimum, exactly
-    * [[connectedComponentsStars]]'s fixpoint (spec-pinned equal). */
+    * [[cluster]]'s fixpoint (spec-pinned equal). */
   def clusterBoundedDriver(nodes: DataFrame, id: String, pairs: DataFrame,
                            maxNodes: Int = 1024): DataFrame = {
     val spark = nodes.sparkSession

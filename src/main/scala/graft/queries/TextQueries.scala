@@ -2311,7 +2311,7 @@ object TextQueries {
         val base = docs(s, d).filter($"doc_id" < 200).select($"doc_id")
         val pairs = base.filter($"doc_id" < 193)
           .select($"doc_id".as("id_a"), ($"doc_id" + 7).as("id_b"))
-        val cc = Dedup.connectedComponentsStars(base, "doc_id", pairs)
+        val cc = Dedup.cluster(base, "doc_id", pairs)
         val sizes = cc.groupBy($"cluster_id").agg(count(lit(1)).as("cluster_size"))
         cc.join(sizes, "cluster_id")
           .select($"id".as("doc_id"), $"cluster_id", $"cluster_size")

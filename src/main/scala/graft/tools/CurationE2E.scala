@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.functions.TextFunctions
 import graft.operators.{Curation, Dedup}
 
@@ -557,16 +557,8 @@ object CurationE2E {
         require(a.matches("x\\d+"), s"expected xN (e.g. x10), got $a")
         a.drop(1).toInt
       }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.local("graft-curation-e2e")
     import spark.implicits._
 
     // Untimed warmup (the Bench/E2E discipline): absorb Hadoop FS init
@@ -613,7 +605,7 @@ object CurationE2E {
 
     val total = base.legs.map(_.sec).sum
     val json =
-      s"""{"metric":"curation_e2e","sf_dir":"$sfDir","cpus":"$cpus",
+      s"""{"metric":"curation_e2e","sf_dir":"$sfDir","cpus":"${Session.cores}",
          |"total_sec":${r4(total)},"legs":${legsJson(base.legs)},
          |"chunks":${base.chunks},"sequences":${base.seqs},
          |"split":{"train_docs":${base.trainDocs},"train_tokens":${base.trainToks},

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.ml.{FareConfig, FarePipeline}
 import graft.multimodal.Multimodal
 import graft.streaming.StreamPipeline
@@ -14,14 +15,7 @@ import graft.streaming.StreamPipeline
   * Prints one DEMO line per module; used by the verify recipe. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    implicit val spark: SparkSession = Session.local("graft-demo", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -2,11 +2,12 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Session
 import graft.functions.TripFeatures
 import graft.ml.{FareConfig, FarePipeline}
 import graft.streaming.StreamPipeline
@@ -47,14 +48,7 @@ object E2E {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("E2E.json")
     val rows = sys.env.getOrElse("GRAFT_E2E_ROWS", "300000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-e2e")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -196,7 +190,7 @@ object E2E {
     val legsJson = legs.map { case (n, s, c) =>
       s""""$n":{"sec":${r4(s)},"rows":$c}""" }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"e2e_reference_flow","rows":$rows,"cpus":"$cpus",
+      s"""{"metric":"e2e_reference_flow","rows":$rows,"cpus":"${Session.cores}",
          |"total_sec":${r4(total)},"legs":$legsJson,
          |"ml_metrics":{"test_rmse":${r4(metrics.testRmse)},"test_mae":${r4(metrics.testMae)},
          |"test_r2":${r4(metrics.testR2)}},

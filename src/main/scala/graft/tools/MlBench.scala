@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.ml.{FareConfig, FarePipeline}
 
 /** ML training-leg benchmark — the engine-side measurement for the ONE
@@ -34,14 +34,7 @@ object MlBench {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("MLBENCH.json")
     val rows = sys.env.getOrElse("GRAFT_MLBENCH_ROWS", "300000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-mlbench")
 
     // ---- fixture (untimed): A2-shaped enriched trips, 300k rows ----
     // 13 numeric + the 4-slot one-hot = the reference's 17 assembled
@@ -124,7 +117,7 @@ object MlBench {
 
     def r4(x: Double) = math.rint(x * 10000) / 10000
     val json =
-      s"""{"metric":"ml_training_leg","rows":$rows,"cpus":$cpus,
+      s"""{"metric":"ml_training_leg","rows":$rows,"cpus":${Session.cores},
          |"total_sec":${r4(totalSec)},"fit_eval_sec":${r4(fitSec)},
          |"passes":$passes,"total_sec_max":${r4(totalMax)},
          |"params":{"model":"rf","numTrees":100,"maxDepth":10,"features":17},

@@ -3,9 +3,9 @@ package graft.tools
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftglue.GraftGlue
 
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Stage-level profile of named queries (optimization-round tooling,
   * guide §1 "measure first"): one warm pass (absorbs codegen/JIT), then
@@ -18,18 +18,8 @@ import graft.SparkEntry
   * a query path, never in the bench methodology. */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Session.sfDir
+    val spark = Session.local("graft-profile")
 
     case class St(id: Int, name: String, tasks: Int, wallMs: Long,
                   taskMs: Long, site: String)
@@ -57,13 +47,15 @@ object Profile {
       (1 to 2).foreach { _ =>
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
+      // the warm passes' events must not reach the listener
+      GraftGlue.drain(spark.sparkContext)
       stages.synchronized { stages.clear(); jobs = 0 }
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // stage events are posted async; give the listener bus a beat
-      Thread.sleep(300)
+      // stage events are posted async: deliver them all before reading
+      GraftGlue.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val snap = stages.synchronized { (stages.toSeq, jobs) }
       println(f"== $name wall=$wall%.3f s  jobs=${snap._2}  stages=${snap._1.size}")

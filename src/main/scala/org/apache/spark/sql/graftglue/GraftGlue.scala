@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftglue
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
@@ -7,13 +8,20 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Column ⇄ catalyst-Expression bridge. Spark 4 made these converters
-  * private[sql] (the Column API is transport-agnostic now); a child
-  * package of org.apache.spark.sql is the sanctioned escape hatch for
-  * libraries that ship custom Catalyst expressions. */
+/** Column ⇄ catalyst-Expression bridge, plus the other Spark internals
+  * the engine reaches (checkpoint partitioning, the listener bus). Spark
+  * 4 made these converters private[sql] (the Column API is
+  * transport-agnostic now); a child package of org.apache.spark.sql is
+  * the sanctioned escape hatch for libraries that ship custom Catalyst
+  * expressions. */
 object GraftGlue {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Blocks until every posted listener event is delivered: events are
+    * posted asynchronously, so a counting listener is read only after a
+    * drain. `listenerBus` is private[spark], hence this package. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 
   /** Frees the block-manager storage behind a `localCheckpoint()`ed
     * Dataset. `Dataset.unpersist` only consults the cache manager,

@@ -80,6 +80,14 @@ class IoSpec extends SparkSpec {
       s"importance order must persist: $imps")
   }
 
+  test("jsonString escapes quote, backslash and control chars; Jackson reads it back") {
+    val in = "a\"b\\c\td\r\n" + 1.toChar
+    val out = Sinks.jsonString(in)
+    assert(!out.exists(_ < ' '), s"raw control char left in $out")
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(out, classOf[String]) == in)
+  }
+
   test("parquet sink/source round-trip preserves schema exactly") {
     val dir = Files.createTempDirectory("pq_rt").toString + "/out"
     Sinks.parquet(df, dir)

@@ -744,7 +744,7 @@ class ScalePostureSpec extends SparkSpec {
     def sig(dir: String): org.apache.spark.sql.Row = spark.read.parquet(dir)
       .agg(count(lit(1)), sum($"l_orderkey"), sum($"l_linenumber"),
         // mod keeps the ANSI-mode long sum from overflowing (the
-        // connectedComponentsStars signature discipline)
+        // Dedup.cluster signature discipline)
         sum(pmod(xxhash64(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity")), lit(1000000007L))))
       .head

@@ -2,24 +2,18 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.graftglue.ListenerGlue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftglue.GraftGlue
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session). Four
+  * cores whatever the machine: job counts and results are pinned at
+  * four partitions. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("graft-test", cores = 4, conf = Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   def sf(name: String): String = s"/root/testdata/$name"
 
@@ -34,9 +28,9 @@ trait SparkSpec extends AnyFunSuite {
           .find(_.contains(site)).getOrElse("?")).mkString(" | ")
       }
     }
-    ListenerGlue.drain(sc)
+    GraftGlue.drain(sc)
     sc.addSparkListener(l)
-    try { body; ListenerGlue.drain(sc) } finally sc.removeSparkListener(l)
+    try { body; GraftGlue.drain(sc) } finally sc.removeSparkListener(l)
     jobs.synchronized(jobs.toSeq)
   }
 }

@@ -267,11 +267,11 @@ class TextDedupSpec extends SparkSpec {
   test("star contraction labels chains, pairs and singletons by component minimum") {
     val nodes = Seq(0L, 1L, 2L, 5L, 6L, 9L).toDF("id")
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
-    val stars = Dedup.connectedComponentsStars(nodes, "id", pairs)
+    val stars = Dedup.cluster(nodes, "id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(stars == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 5L -> 5L, 6L -> 5L, 9L -> 9L))
     val none = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val iso = Dedup.connectedComponentsStars(Seq(3L, 7L).toDF("id"), "id", none)
+    val iso = Dedup.cluster(Seq(3L, 7L).toDF("id"), "id", none)
       .as[(Long, Long)].collect().toMap
     assert(iso == Map(3L -> 3L, 7L -> 7L), "no edges -> identity labeling")
   }
@@ -283,7 +283,7 @@ class TextDedupSpec extends SparkSpec {
     val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L), (1L, 0L)).toDF("id_a", "id_b")
     val drv = Dedup.clusterBoundedDriver(nodes, "id", pairs, maxNodes = 8)
       .as[(Long, Long)].collect().toMap
-    val stars = Dedup.connectedComponentsStars(nodes, "id",
+    val stars = Dedup.cluster(nodes, "id",
       pairs.dropDuplicates()).as[(Long, Long)].collect().toMap
     assert(drv == stars, s"driver union-find diverged: $drv vs $stars")
     // a chain graph too (the adversarial shape for min-label)
@@ -308,7 +308,7 @@ class TextDedupSpec extends SparkSpec {
     val n = 64
     val nodes = (0L until n.toLong).toDF("id")
     val pairs = (0L until (n - 1).toLong).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (cc, rounds) = Dedup.connectedComponentsStarsWithRounds(nodes, "id", pairs)
+    val (cc, rounds) = Dedup.clusterWithRounds(nodes, "id", pairs)
     val labels = cc.as[(Long, Long)].collect().toMap
     assert(labels.values.toSet == Set(0L), "single path is one component labeled 0")
     assert(rounds <= 10,
