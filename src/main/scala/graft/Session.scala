@@ -27,9 +27,8 @@ object Session {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.ui.enabled", "false")
-    val spark = conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+      // on the builder: a setLogLevel after getOrCreate misses start-up
+      .config("spark.log.level", "WARN")
+    conf.foldLeft(base) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
   }
 }

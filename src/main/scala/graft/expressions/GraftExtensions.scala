@@ -3,6 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** SparkSessionExtensions entry point — the deployment-grade way to ship
   * the engine's custom Catalyst pieces into any session:
@@ -14,9 +15,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * [[RewriteSizeOfArrayIntersect]] optimizer rule (the Rule tier:
   * `size(array_intersect(a, b))` → the allocation-free
   * [[IntersectCount]], transparently, for SQL and DataFrame plans
-  * alike). A custom SparkStrategy/SparkPlan would register here too if
-  * an operator ever outgrew the Expression+Rule tiers (none has — see
-  * SURVEY.md §7.3).
+  * alike), plus the planner strategy that gives a partition-keeping
+  * checkpoint ([[GraftGlue.materialize]]) a scan whose canonical form
+  * lets its exchanges be reused.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -29,5 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         CosineSimilarity(exprs.head, exprs(1))
       }))
     e.injectOptimizerRule(_ => RewriteSizeOfArrayIntersect)
+    e.injectPlannerStrategy(_ => GraftGlue.PartitionedRDDScan)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.ml.feature.{OneHotEncoder, OneHotEncoderModel, StandardS
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor, RandomForestRegressionModel, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{abs, col, concat_ws, conv, count, lit, md5, pmod, substring, sum, var_samp, when}
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.io.Sinks.jsonString
 
@@ -170,7 +171,7 @@ object FarePipeline {
                     folds: Int = 5): CvMetrics = {
     require(folds >= 2, s"folds must be >= 2: $folds")
     val withFold = withFolds(df, cfg, folds)
-      .localCheckpoint() // assignment materializes once for all k fits
+      .transform(GraftGlue.materialize(_)) // assignment materializes once for all k fits
     val rmses = (0 until folds).map { f =>
       val model = build(cfg).fit(withFold.filter(col("__fold") =!= f))
       scores(model.transform(withFold.filter(col("__fold") === f)),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Distributed byte-pair-encoding merge training (Sennrich, Haddow &
   * Birch, "Neural Machine Translation of Rare Words with Subword Units",
@@ -53,7 +54,7 @@ object Bpe {
 
   /** Train `rounds` BPE merges over a (word, freq) table. Returns the
     * merge table (round, l, r, cnt) — the artifact a tokenizer ships.
-    * Each round's state is localCheckpoint'd (vocabulary-sized), so
+    * Each round's state is checkpointed (vocabulary-sized), so
     * plan depth stays O(1) across rounds (the k-means/PageRank trick).
     * The per-round argmax is a sort-limit over the pair table — bounded
     * by the vocabulary's adjacent-pair count, never by the corpus. */
@@ -78,18 +79,18 @@ object Bpe {
   private def fold(words: DataFrame, word: String, freq: String,
                    rounds: Int): (DataFrame, DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    var state = initialState(words, word, freq).localCheckpoint()
+    var state = GraftGlue.materialize(initialState(words, word, freq))
     var merges: DataFrame = null
     for (i <- 1 to rounds) {
       val best = pairCounts(state)
         .orderBy(col("cnt").desc, col("l"), col("r")).limit(1)
-        .withColumn("round", lit(i)).localCheckpoint()
+        .withColumn("round", lit(i)).transform(GraftGlue.materialize(_))
       merges = if (merges == null) best else merges.unionByName(best)
       state = state.crossJoin(broadcast(best.select(col("l"), col("r"))))
         .select(col("word"), expr(
           "replace(state, '|' || l || '||' || r || '|', '|' || l || r || '|')")
           .as("state"), col("freq"))
-        .localCheckpoint()
+        .transform(GraftGlue.materialize(_))
     }
     (merges.select(col("round"), col("l"), col("r"), col("cnt")), state)
   }

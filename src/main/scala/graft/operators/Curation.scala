@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.functions.TextFunctions
 
@@ -54,7 +55,7 @@ object Curation {
       .select(col(id), posexplode(split(lower(col(text)), " ")))
       .toDF(id, "pos", "term")
       .filter(col("term").isin(phrase.distinct: _*))
-      .localCheckpoint() // one scan feeds all |phrase| term branches
+      .transform(GraftGlue.materialize(_)) // one scan feeds all |phrase| term branches
     def termAt(t: String, off: Int): DataFrame = post
       .filter(col("term") === t)
       .select(col(id), (col("pos") - off).as("start"))

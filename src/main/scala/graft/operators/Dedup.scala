@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.functions.TextFunctions
 
@@ -38,7 +39,7 @@ object Dedup {
     *
     * The fixpoint is the star graph centered at each component's minimum
     * id — the labels min-label propagation reaches, which the DuckDB
-    * recursive-CTE oracles compute. Alternations are localCheckpoint'd,
+    * recursive-CTE oracles compute. Alternations are checkpointed locally,
     * which is not fault-tolerant. `pairs` holds one (id_a, id_b) row per
     * undirected edge; `nodes` is the id universe (isolated nodes become
     * singletons). Returns (id, cluster_id); fails loudly if `maxIter`
@@ -73,7 +74,7 @@ object Dedup {
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(false)
+      .transform(GraftGlue.materialize(_, eager = false))
     var edgeSig = sig(edges)
     var converged = false
     var round = 0
@@ -107,7 +108,7 @@ object Dedup {
         .select(col("v").as("u"), col("m").as("v"))
         .union(sm.select(col("u"), col("m").as("v")))
         .distinct()
-        .localCheckpoint(false) // materialized by the sig job below
+        .transform(GraftGlue.materialize(_, eager = false)) // materialized by the sig job below
       // signature mismatch disproves convergence outright; on a match,
       // ONE one-sided except confirms it — both sides are distinct sets,
       // so equal cardinality + next ⊆ edges ⇒ set equality (no symmetric
@@ -529,11 +530,15 @@ object Dedup {
     // each over the 1-partition checkpoint (0.96 + 0.85 s of q205's
     // wall): the broadcast candidate side follows the sets side's
     // partitioning, so a 1-partition checkpoint serializes the
-    // jaccardDistinct verify work. One id-keyed exchange of the narrow
-    // (id, sh_set) rows lets both joins verify 32-way; spreadIfNarrow
-    // keeps it the identity on an already-parallel frame at scale.
-    val sets = Relational.spreadIfNarrow(tokenSets(df, id, text), col(id))
-      .localCheckpoint()
+    // jaccardDistinct verify work. One exchange of the narrow (id,
+    // sh_set) rows lets both joins verify 32-way; spreadIfNarrow keeps it
+    // the identity on an already-parallel frame at scale. Round-robin,
+    // not id-keyed: the checkpoint would keep an id partitioning, and the
+    // planner then streams the sets co-partitioned, broadcasts the
+    // candidates and re-shuffles the wide first-join rows by id_b
+    // (q205 at sf0.01: one more job, 1.27 → 1.49 s).
+    val sets = Relational.spreadIfNarrow(tokenSets(df, id, text))
+      .transform(GraftGlue.materialize(_))
     cands
       .join(sets.select(col(id).as("id_a"), col("sh_set").as("sh_a")), "id_a")
       .join(sets.select(col(id).as("id_b"), col("sh_set").as("sh_b")), "id_b")
@@ -649,14 +654,14 @@ object Dedup {
     // stored arrays (the prefixJaccardPairs discipline)
     val docSets = docSetsIn
       .withColumn("__n", size(col("__set")))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // 64-bit shingle hashes through the candidate machinery: exchanges
     // move 8-byte keys, and a collision can only ADD a spurious
     // candidate — the exact array_intersect verify removes it
     val toks = docSets
       .select(col("doc"), col("__n"), explode(col("__set")).as("__s"))
       .select(col("doc"), col("__n"), xxhash64(col("__s")).as("sh"))
-    val cand = containmentCandidates(toks, tNum, tDen).localCheckpoint()
+    val cand = GraftGlue.materialize(containmentCandidates(toks, tNum, tDen))
     // exact verify on the true shingle arrays, candidates only
     cand
       .join(docSets.select(col("doc").as("id_src"), col("__set").as("__ss"),
@@ -709,7 +714,7 @@ object Dedup {
     // disk, and it is read three times instead of rebuilt.
     val docSets = df.select(col(id).as("doc"), shingles.as("__set"))
       .withColumn("__n", size(col("__set")))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // Shingles collapse to a 64-bit hash at the explode: every exchange,
     // join and window sort then moves 8-byte keys instead of multi-word
     // strings. A collision can only merge two shingles' df counts or
@@ -750,17 +755,17 @@ object Dedup {
     // r18: the candidate table has THREE consumers (both candIds sides +
     // the verify join) — without a checkpoint each re-runs the prefix
     // self-join + distinct; pairs are two ids each, cheap to hold
-    val cand = prefixCandidates(toks, tNum, tDen).localCheckpoint()
+    val cand = GraftGlue.materialize(prefixCandidates(toks, tNum, tDen))
     // no broadcast HINT on the candidate-id semi-join: the candidate set
     // scales with the corpus's duplication rate (worst case most of the
     // corpus), and a forced broadcast of a data-scaled frame is a driver
-    // OOM at 100 TB. The localCheckpoint gives the planner the frame's
+    // OOM at 100 TB. The checkpoint gives the planner the frame's
     // EXACT size instead of an AQE guess re-derived every run, so the
     // semi-join broadcasts statically whenever the set is actually small
     // (the common case) and shuffles when it is not.
     val candIds = cand.select(col("id_a").as("doc"))
       .union(cand.select(col("id_b").as("doc"))).distinct()
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // spread the verify-set derivation too (same narrow-HOF rationale):
     // the semi-join of a narrow scan against a broadcast stays narrow
     val verifySets = Relational.spreadIfNarrow(
@@ -769,7 +774,7 @@ object Dedup {
       .select(col(id).as("doc"),
         TextFunctions.wordShingles(col(text), n).as("__set"))
       .withColumn("__n", size(col("__set")))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     verifyJaccard(cand, verifySets, tNum, tDen)
   }
 
@@ -794,7 +799,7 @@ object Dedup {
       .filter(col("__pos") <=
         col("__n") - expr(s"(($tNum * CAST(__n AS BIGINT) + ${tDen - 1}) div $tDen)") + 1)
       .select(col("doc").as("id_src"), col("sh"), col("__n").as("__n_src"))
-    val pref = if (checkpoint) pref0.localCheckpoint() else pref0
+    val pref = if (checkpoint) pref0.transform(GraftGlue.materialize(_)) else pref0
     // dst side indexes ALL tokens (containment has no dst-side prefix:
     // the container may be arbitrarily larger than the contained doc);
     // distinct key names — an ambiguous self-join key would tempt the
@@ -831,7 +836,7 @@ object Dedup {
       // materialize: the self-join below would otherwise expand the whole
       // explode→df-count→window pipeline once PER SIDE; the prefix table
       // is ~n·(1−t) rows per doc, cheap to hold, expensive to rebuild
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     pref.alias("a")
       .join(pref.alias("b"),
         col("a.sh") === col("b.sh") && col("a.doc") < col("b.doc") &&
@@ -935,7 +940,7 @@ object Dedup {
     * shuffle-bounded, no n² anywhere; bucket skew (low-entropy corpora
     * concentrate chunk values) is the LSH stop-bucket story again and
     * AQE's skew split covers the join. The sketch table is
-    * localCheckpoint'd: three consumers would otherwise recompute the
+    * checkpointed: three consumers would otherwise recompute the
     * full token-hash aggregate. */
   def simhashBandedPairs(df: DataFrame, id: String, text: String,
                          maxDist: Int = 3, scheme: String = "md5"): DataFrame = {
@@ -945,7 +950,7 @@ object Dedup {
     val sketch =
       if (scheme == "xx64") simhashChunksXx(df, id, text)
       else simhashChunks(df, id, text)
-    val sk = sketch.localCheckpoint()
+    val sk = GraftGlue.materialize(sketch)
     val bands = sk.select(col(id),
       posexplode(array(col("c0"), col("c1"), col("c2"), col("c3")))
         .as(Seq("bi", "bv")))
@@ -1020,7 +1025,7 @@ object Dedup {
     require(maxBucket >= 2,
       s"maxBucket=$maxBucket: a cap below 2 drops every bucket and returns zero pairs")
     val sk = sketch.select(col(id), col("c0"), col("c1"), col("c2"), col("c3"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val bands = sk.select(col(id),
       posexplode(array(hammingBandExprs(nBands): _*)).as(Seq("bi", "bv")))
     val keep = bands.groupBy(col("bi"), col("bv"))
@@ -1083,7 +1088,7 @@ object Dedup {
     // null chunks refuse loudly at the shared projection (see
     // nonNullChunk) — both the band stream and the verify read sk
     val sk = sketch.select((col(id) +: chunkNames.map(c =>
-      nonNullChunk(col(id), c).as(c))): _*).localCheckpoint()
+      nonNullChunk(col(id), c).as(c))): _*).transform(GraftGlue.materialize(_))
     val bandExprs: Seq[Column] =
       if (chunksPerBand == 1) chunkNames.map(col)
       else (0 until nBands).map(b => concat_ws(":",
@@ -1351,7 +1356,7 @@ object Dedup {
     require(maxDf >= 2,
       s"maxDf=$maxDf: a cap below 2 drops every shared fingerprint")
     val fps = fpsIn.select(col(id), col("fp")).distinct()
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
     val posts = fps.join(keep, "fp")
@@ -1916,14 +1921,14 @@ object Dedup {
     require(maxDf >= 2, s"maxDf=$maxDf: a cap below 2 empties the join space")
     require(tNum > 0 && tDen >= tNum, s"need 0 < tNum/tDen <= 1; got $tNum/$tDen")
     val tf = tfIn
-      .localCheckpoint() // read 3x: df table, norms, postings
+      .transform(GraftGlue.materialize(_)) // read 3x: df table, norms, postings
     val dfTab = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     // carry df through ONE join and derive the space/postings as
     // filters — a second dfTab join over the dominant token stream
     // would re-shuffle it just to reapply a predicate on a value
     // already in hand (round-15 self-review catch)
     val inSpace = tf.join(dfTab, "w").filter(col("df") <= maxDf)
-      .localCheckpoint() // read 3x: norms + both posting join sides
+      .transform(GraftGlue.materialize(_)) // read 3x: norms + both posting join sides
     val norms = inSpace.groupBy(col("doc")).agg(sum(col("tf")).as("norm"))
     val posts = inSpace.filter(col("df") >= 2).drop("df")
     posts.alias("a")

@@ -23,9 +23,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * Scale shape of [[pageRankFixed]], [[hitsFixed]] and [[kCoreFixed]]:
   * Pregel-style rounds (Malewicz et al., SIGMOD 2010). The distinct edge
   * table is checkpointed ONCE, hash-partitioned by the round's aggregate
-  * key through [[GraftGlue.localCheckpointPartitioned]] (a raw
-  * `localCheckpoint` under AQE forgets the partitioning, and every round
-  * re-shuffled the edges). The node-sized state — rank vector,
+  * key through [[GraftGlue.materialize]], which keeps that partitioning
+  * (so no round re-shuffles the edges). The node-sized state — rank vector,
   * hub/authority scores, k-core survivors — stays on the driver between
   * rounds, behind the loud [[MaxDriverNodes]] bound. Each round
   * broadcasts it, runs ONE aggregate over the edge checkpoint (no
@@ -57,8 +56,7 @@ object Graph {
     val e = edges.select(col(src).as("src"), col(dst).as("dst"))
     require(e.schema("src").dataType == e.schema("dst").dataType,
       s"src and dst ids must share one type: ${e.schema.simpleString}")
-    GraftGlue.localCheckpointPartitioned(
-      Relational.spread(e, col(key)).distinct())
+    GraftGlue.materialize(Relational.spread(e, col(key)).distinct())
   }
 
   /** One round: broadcast the driver-held `state` (node id → long),
@@ -160,10 +158,10 @@ object Graph {
       .select(least(col(idA), col(idB)).as("u"),
         greatest(col(idA), col(idB)).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val deg = e.select(col("u").as("id")).union(e.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // orient each edge toward the (deg, id)-larger endpoint; keep the
     // destination's degree so later order comparisons need no re-join
     val keyed = e
@@ -174,7 +172,7 @@ object Graph {
         when(uFirst, col("u")).otherwise(col("v")).as("src"),
         when(uFirst, col("v")).otherwise(col("u")).as("dst"),
         when(uFirst, col("dv")).otherwise(col("du")).as("ddeg"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // wedges at src with ordered endpoints, closed by an oriented v→w edge
     val cand = oriented.select(col("src"), col("dst").as("wv"), col("ddeg").as("wvd"))
       .join(oriented.select(col("src"), col("dst").as("ww"), col("ddeg").as("wwd")), "src")
@@ -208,18 +206,18 @@ object Graph {
     * pre-partitioned once and reused), one distinct and one anti-join —
     * all shuffles on node ids, all proportional to the FRONTIER, not
     * the graph; reached/frontier state is one (node, dist) row per
-    * reached node, localCheckpoint'd so plan depth stays O(1).
+    * reached node, checkpointed so plan depth stays O(1).
     * Returns (node, dist), dist in [0, rounds]. */
   def bfsLevels(edges: DataFrame, src: String, dst: String,
                 source: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0: $rounds")
     val e = edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
       .transform(Relational.spread(_, col("src")))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     var reached = source.select(col(source.columns.head).as("node"))
       .distinct()
       .select(col("node"), lit(0).as("dist"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     var frontier = reached
     var i = 1
     // an empty frontier makes every remaining round a no-op on both
@@ -237,9 +235,9 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(reached, Seq("node"), "left_anti")
         .select(col("node"), lit(i).as("dist"))
-        .localCheckpoint(eager = false)
+        .transform(GraftGlue.materialize(_, eager = false))
       frontierNonEmpty = next.count() > 0
-      reached = reached.union(next).localCheckpoint(eager = false)
+      reached = GraftGlue.materialize(reached.union(next), eager = false)
       frontier = next
       i += 1
     }
@@ -320,8 +318,7 @@ object Graph {
                 scale: Long = 1000000000L): DataFrame = {
     require(iters >= 1 && scale > 0, s"bad params: iters=$iters scale=$scale")
     val eByDst = edgeTable(edges, src, dst, "dst")
-    val eBySrc = GraftGlue.localCheckpointPartitioned(
-      Relational.spread(eByDst, col("src")))
+    val eBySrc = GraftGlue.materialize(Relational.spread(eByDst, col("src")))
     val bigScale = java.math.BigInteger.valueOf(scale)
     // raw(v) = Σ score(u) over the edges u→v of `e` grouped by `to`,
     // then L1-normalized; a node with no entry in `score` reads `miss`
@@ -391,7 +388,7 @@ object Graph {
     * convergence not required for reproducibility (the round count IS
     * part of the contract). State space (channels + virtual states) is
     * tiny; each round is one broadcast-scale join + aggregate,
-    * localCheckpoint'd to keep plan depth O(1).
+    * checkpointed to keep plan depth O(1).
     *
     * This is the UNBOUNDED-state form. When the chain is channel-
     * bounded (every real attribution model), prefer
@@ -399,12 +396,12 @@ object Graph {
     * collected matrix, zero per-round Spark jobs. */
   def absorptionFixed(trans: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1: $iters")
-    val scen = trans.select(col("sc")).distinct().localCheckpoint()
+    val scen = GraftGlue.materialize(trans.select(col("sc")).distinct())
     def absorbing = scen
       .select(col("sc"), lit("CONV").as("st"), lit(1000000000L).as("p"))
       .unionByName(scen
         .select(col("sc"), lit("NULL").as("st"), lit(0L).as("p")))
-    var p = absorbing.localCheckpoint()
+    var p = GraftGlue.materialize(absorbing)
     for (_ <- 1 to iters) {
       p = trans.as("tr").join(p.as("pp"),
           col("tr.sc") === col("pp.sc") && col("tr.t") === col("pp.st"))
@@ -413,7 +410,7 @@ object Graph {
         .groupBy(col("sc"), col("s")).agg(sum(col("term")).as("p"))
         .select(col("sc"), col("s").as("st"), col("p"))
         .unionByName(absorbing)
-        .localCheckpoint()
+        .transform(GraftGlue.materialize(_))
     }
     p
   }
@@ -502,9 +499,9 @@ object Graph {
     def sized(df: DataFrame): DataFrame =
       if (statePartitions > 0) df.coalesce(statePartitions) else df
     val e = sized(edges.select(col(src).as("src"), col(dst).as("dst"))
-      .distinct()).localCheckpoint()
+      .distinct()).transform(GraftGlue.materialize(_))
     var lbl = sized(e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))).localCheckpoint()
+      .select(col("node"), col("node").as("lbl"))).transform(GraftGlue.materialize(_))
     for (_ <- 1 to rounds) {
       val w = Window.partitionBy(col("src"))
         .orderBy(col("cnt").desc, col("lbl").asc)
@@ -513,7 +510,7 @@ object Graph {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("src").as("node"), col("lbl")))
-        .localCheckpoint(eager = false) // lazy: O(1) depth, no count() job
+        .transform(GraftGlue.materialize(_, eager = false)) // lazy: O(1) depth, no count() job
     }
     lbl
   }
@@ -595,9 +592,9 @@ object Graph {
     val cs = edges.select(col(src).cast("string").as("src"),
       col(dst).cast("string").as("dst"))
     val both = cs.union(cs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint() // feeds the degree build AND the moment join
+      .transform(GraftGlue.materialize(_)) // feeds the degree build AND the moment join
     val deg = both.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // two join sides + the node count read it
+      .transform(GraftGlue.materialize(_)) // two join sides + the node count read it
     val pairs = both
       .join(deg.select(col("node").as("src"), col("deg").as("du")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dv")), "dst")

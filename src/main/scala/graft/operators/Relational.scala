@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Generic relational operators from SURVEY.md §2.2/§2.5, parameterized by
   * column. Every operator is expressed as a declarative plan (no
@@ -22,11 +23,11 @@ object Relational {
     * 4.6 s → 0.8 s, q42 MinHash 2.25 → 1.49 s, q95 2.18 → 1.63 s.
     * Count = defaultParallelism, so the same code sizes itself to any
     * cluster; hash partitioning on `cols` is preserved, so downstream
-    * same-key aggregates still need no further exchange. Across a
-    * checkpoint that holds only through
-    * [[org.apache.spark.sql.graftglue.GraftGlue.localCheckpointPartitioned]]:
-    * a raw `localCheckpoint` under AQE drops the partitioning, and every
-    * consumer of the checkpoint shuffles again. */
+    * same-key aggregates still need no further exchange. That holds
+    * across an eager
+    * [[org.apache.spark.sql.graftglue.GraftGlue.materialize]] too: it
+    * keeps the partitioning, so the checkpoint's consumers do not
+    * shuffle again. */
   def spread(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, cols: _*)
 
@@ -102,13 +103,6 @@ object Relational {
     * rounded quantiles.
     *
     * Returns one row with columns p0..p{qs.size-1}. */
-  /** @param reuseScan materialize the projected (cents, round-trip-error)
-    *   columns once (localCheckpoint) so the three passes re-read a
-    *   16-byte-per-row block instead of re-scanning the source. Worth it
-    *   when the source scan is expensive relative to spilling that
-    *   projection (wide rows, remote storage, costly decode); leave off
-    *   when a narrow columnar re-scan is cheaper than executor-local
-    *   materialization. Results are identical either way. */
   /** @param domainBounded caller's promise that the column's VALUE DOMAIN
     *   is structurally bounded (money cents, counts, day offsets — not
     *   arbitrary 64-bit data): the engine then folds its three corpus
@@ -123,7 +117,6 @@ object Relational {
                               scale: Int = 100, minBucketWidth: Long = 1024L,
                               maxCoarseBuckets: Long = 1L << 16,
                               strict: Boolean = false,
-                              reuseScan: Boolean = false,
                               domainBounded: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def centsOf(x: Column): Column = round(x * scale).cast("long")
@@ -131,14 +124,13 @@ object Relational {
       floor(cents.cast("double") / col("__W")).cast("long")
 
     // Level 0: value range → adaptive bucket width (one-row broadcast).
-    val rows0 = {
+    val rows = {
       val base = df.filter(col(c).isNotNull)
       if (strict) // the round-trip error column exists only when checked
         base.select(centsOf(col(c)).as("__cents"),
           abs(col(c) - centsOf(col(c)).cast("double") / scale).as("__err"))
       else base.select(centsOf(col(c)).as("__cents"))
     }
-    val rows = if (reuseScan) rows0.localCheckpoint() else rows0
     // domainBounded: the ONE corpus pass — per-value counts (plus the
     // per-value max round-trip error when strict, whose max-of-maxes is
     // the global max the strict gate needs)
@@ -146,7 +138,7 @@ object Relational {
       val aggs = Seq(sum(lit(1L)).as("__hcnt")) ++
         (if (strict) Seq(max(col("__err")).as("__err")) else Nil)
       rows.groupBy(col("__cents")).agg(aggs.head, aggs.tail: _*)
-        .localCheckpoint()
+        .transform(GraftGlue.materialize(_))
     }
     val wBase = greatest(lit(minBucketWidth),
       ceil((col("__cmax") - col("__cmin") + 1).cast("double") / maxCoarseBuckets).cast("long"))
@@ -279,7 +271,7 @@ object Relational {
     // refine all run over the domain-bounded distinct-value table
     val hist = if (!domainBounded) None else Some(
       rows.groupBy(col("__m"), col("__cents"))
-        .agg(sum(lit(1L)).as("__hcnt")).localCheckpoint())
+        .agg(sum(lit(1L)).as("__hcnt")).transform(GraftGlue.materialize(_)))
     // per-metric adaptive width — a |cs|-row broadcast frame
     val statsW = hist.getOrElse(rows).groupBy(col("__m"))
       .agg(min(col("__cents")).as("__cmin"), max(col("__cents")).as("__cmax"))
@@ -368,10 +360,9 @@ object Relational {
     * way, just at quantized resolution. */
   def iqrBounds(df: DataFrame, c: String, factor: Double = 1.5,
                 scale: Int = 100, strict: Boolean = false,
-                reuseScan: Boolean = false,
                 domainBounded: Boolean = false): DataFrame =
     exactQuantilesQuantized(df, c, Seq(0.25, 0.75), scale, strict = strict,
-        reuseScan = reuseScan, domainBounded = domainBounded)
+        domainBounded = domainBounded)
       .select(col("p0").as("q1"), col("p1").as("q3"))
       .select((col("q1") - lit(factor) * (col("q3") - col("q1"))).as("lo"),
               (col("q3") + lit(factor) * (col("q3") - col("q1"))).as("hi"))
@@ -588,10 +579,8 @@ object Relational {
   }
 
   def iqrFilter(df: DataFrame, c: String, factor: Double = 1.5,
-                reuseScan: Boolean = false,
                 domainBounded: Boolean = false): DataFrame =
-    df.crossJoin(broadcast(iqrBounds(df, c, factor, reuseScan = reuseScan,
-        domainBounded = domainBounded)))
+    df.crossJoin(broadcast(iqrBounds(df, c, factor, domainBounded = domainBounded)))
       .filter(col(c) >= col("lo") && col(c) <= col("hi"))
       .drop("lo", "hi")
 
@@ -628,7 +617,6 @@ object Relational {
     * error with `strict = true`. */
   def summaryStats(df: DataFrame, c: String, roundScale: Int = 6,
                    strict: Boolean = false,
-                   reuseScan: Boolean = false,
                    domainBounded: Boolean = false): DataFrame =
     df.agg(
       count(col(c)).as("n"),
@@ -637,7 +625,7 @@ object Relational {
       min(col(c)).as("mn"),
       max(col(c)).as("mx"))
     .crossJoin(broadcast(exactQuantilesQuantized(df, c, Seq(0.25, 0.5, 0.75),
-      strict = strict, reuseScan = reuseScan, domainBounded = domainBounded)))
+      strict = strict, domainBounded = domainBounded)))
     .select(col("n"), col("mean"), col("sd"), col("mn"),
       round(col("p0"), roundScale).as("q1"),
       round(col("p1"), roundScale).as("median"),

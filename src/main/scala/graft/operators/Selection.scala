@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Corpus-selection operators for training-data curation: "take the best
   * documents until a token budget is filled" without ever globally
@@ -43,7 +44,7 @@ object Selection {
       // this the caller's scoring expressions (often text splits, the
       // q83 shape) re-run per branch; the materialized frame is the
       // narrow (id, weight, score) projection, not the documents
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     // 1. score histogram (one row per distinct score)
     val byScore = scored.groupBy(col("__s")).agg(sum(col("__w")).as("__tok"))
     // 2. cumulative weight in score-DESC order via the range-partitioned

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.functions.VectorFunctions._
 
@@ -148,7 +149,7 @@ object Similarity {
     *
     * Each Lloyd iteration is one broadcast join + two hash aggregates
     * (argmin by point, mean by cell,pos); the k×d centroid table is
-    * `localCheckpoint`ed per round to truncate lineage, so plan depth
+    * checkpointed per round to truncate lineage, so plan depth
     * stays O(1) as iterations grow. At 100 TB the per-iteration cost is a
     * single narrow pass over the points — the textbook scalable k-means
     * shape (MLlib's KMeans does the same passes, with driver-side
@@ -168,7 +169,7 @@ object Similarity {
     // the quantized vectors only (d longs/row), the k-means working set
     // MLlib caches too.
     val pts = fixedPts(df, id, vec, scale)
-      .transform(Relational.spread(_, col("pid"))).localCheckpoint()
+      .transform(Relational.spread(_, col("pid"))).transform(GraftGlue.materialize(_))
     (pts, lloydFixed(pts, k, iters))
   }
 
@@ -185,7 +186,7 @@ object Similarity {
       // window over k rows only (post-limit) — bounded by construction
       .withColumn("cell", row_number().over(seedW).cast("int"))
       .select(col("cell"), col("pf").as("cf"))
-      .coalesce(1).localCheckpoint()
+      .coalesce(1).transform(GraftGlue.materialize(_))
     val vsum = udaf(graft.functions.Aggregators.VecSumCount)
     for (_ <- 1 to iters) {
       // centroid update in one aggregate: per-cell element-wise sums +
@@ -200,7 +201,7 @@ object Similarity {
             v => round(v.cast("double") / col("sc._2")).cast("long")).as("cf"))
       cents = cents.as("o").join(upd.as("u"), Seq("cell"), "left_outer")
         .select(col("cell"), coalesce(col("u.cf"), col("o.cf")).as("cf"))
-        .coalesce(1).localCheckpoint()
+        .coalesce(1).transform(GraftGlue.materialize(_))
     }
     cents
   }
@@ -227,7 +228,7 @@ object Similarity {
     * every codebook independently and hashes equal). */
   private def lloydFixedGrouped(ptsM: DataFrame, seeds: DataFrame,
                                 iters: Int): DataFrame = {
-    var cents = seeds.coalesce(1).localCheckpoint()
+    var cents = GraftGlue.materialize(seeds.coalesce(1))
     val vsum = udaf(graft.functions.Aggregators.VecSumCount)
     for (_ <- 1 to iters) {
       val upd = assignCellsGrouped(ptsM, cents)
@@ -238,7 +239,7 @@ object Similarity {
             v => round(v.cast("double") / col("sc._2")).cast("long")).as("cf"))
       cents = cents.as("o").join(upd.as("u"), Seq("m", "cell"), "left_outer")
         .select(col("m"), col("cell"), coalesce(col("u.cf"), col("o.cf")).as("cf"))
-        .coalesce(1).localCheckpoint()
+        .coalesce(1).transform(GraftGlue.materialize(_))
     }
     cents
   }
@@ -528,7 +529,7 @@ object Similarity {
       .join(broadcast(cents), "cell")
       .select(col("pid"), col("cell"),
         vecSubFixed(col("pf"), col("cf")).as("rf"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     def subOf(m: Int): Column = slice(col("rf"), m * subDim + 1, subDim)
     def subArr: Column = array((0 until subspaces).map(subOf): _*)
     // one row per (point, subspace), pid-partitioned and materialized:
@@ -537,7 +538,7 @@ object Similarity {
     // pqIters grouped rounds instead of M·pqIters sequential ones
     val resM = res
       .select(col("pid"), col("cell"), posexplode(subArr).as(Seq("m", "pf")))
-      .transform(Relational.spread(_, col("pid"))).localCheckpoint()
+      .transform(Relational.spread(_, col("pid"))).transform(GraftGlue.materialize(_))
     // seeds: the ksub smallest-digest points, cell ids in digest order —
     // the same seedless hash-sample as lloydFixed, sliced once per m
     val seeds = res
@@ -633,7 +634,7 @@ object Similarity {
     * scoring that produces the topN relevance list — swap in ivfTopK
     * candidates at scale); everything after runs on the topN×topN sim
     * grid and k tiny argmax rounds, each a sort-limit over ≤ topN rows
-    * (localCheckpoint'd so plan depth stays O(1) across rounds). Rank 1
+    * (checkpointed so plan depth stays O(1) across rounds). Rank 1
     * reports mmr = rel (no selected set to repel from yet). Greedy is
     * inherently sequential in k — the bounded-frame fold IS the
     * distributed-friendly formulation. */
@@ -646,16 +647,16 @@ object Similarity {
       .select(col("cand_id"), col("cv"),
         cosineFast(col("qv"), col("cv")).as("rel"))
       .orderBy(col("rel").desc, col("cand_id")).limit(topN)
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val sims = cands.select(col("cand_id").as("a"), col("cv").as("av"))
       .crossJoin(broadcast(
         cands.select(col("cand_id").as("b"), col("cv").as("bv"))))
       .filter(col("a") =!= col("b"))
       .select(col("a"), col("b"), cosineFast(col("av"), col("bv")).as("sim"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     var sel = cands.orderBy(col("rel").desc, col("cand_id")).limit(1)
       .select(col("cand_id"), lit(1).as("rank"), col("rel").as("mmr"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     for (t <- 2 to k) {
       val m = sims
         .join(broadcast(sel.select(col("cand_id").as("b"))), Seq("b"))
@@ -668,7 +669,7 @@ object Similarity {
             (lit(1.0) - lit(lambda)) * col("max_sim")).as("mmr"))
         .orderBy(col("mmr").desc, col("cand_id")).limit(1)
         .select(col("cand_id"), lit(t).as("rank"), col("mmr"))
-      sel = sel.unionByName(pick).localCheckpoint()
+      sel = GraftGlue.materialize(sel.unionByName(pick))
     }
     sel.select(col("rank"), col("cand_id"), col("mmr"))
   }
@@ -999,7 +1000,7 @@ object Similarity {
     // Dedup.nonNullChunk rationale — round-16 advice)
     val qsk = queries.select(col(id).as("query_id") +:
       Chunks.map(c => Dedup.nonNullChunk(col(id), c).as(s"q$c")): _*)
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val csk = candidates.select(col(id).as("cand_id") +:
       Chunks.map(c => Dedup.nonNullChunk(col(id), c).as(c)): _*)
     def bandExprs: Seq[Column] =

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Closed-form statistics over exact integer moments — the one-pass,
   * shuffle-free estimators a warehouse runs where an ML library would
@@ -128,7 +129,7 @@ object Stats {
     import org.apache.spark.sql.expressions.Window
     val ranged = df.repartitionByRange(col(v))
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val hi = if (inclusive) 0 else -1
     val local = Window.partitionBy(col("__pid")).orderBy(col(v))
       .rowsBetween(Window.unboundedPreceding, hi)
@@ -183,8 +184,8 @@ object Stats {
     // (b) the x-marginal IS checkpointed — without it the sampling job
     // re-scans the data (tiny frame, no decimals, no downside).
     def d38(c: Column): Column = c.cast("decimal(38,0)")
-    val xm = df.groupBy(col(x)).agg(count(lit(1)).as("n")).localCheckpoint()
-    val rxFull = doubledAvgRanks(xm, x, "n").localCheckpoint()
+    val xm = GraftGlue.materialize(df.groupBy(col(x)).agg(count(lit(1)).as("n")))
+    val rxFull = GraftGlue.materialize(doubledAvgRanks(xm, x, "n"))
     // every x-side moment folds over the x-marginal (|domain(x)| rows),
     // so the per-y aggregate below carries only (n, Σx, Σrx2)
     val xmom = rxFull.agg(
@@ -229,7 +230,7 @@ object Stats {
     * inclusive sums as 2·(ca+cb −na−nb) + na+nb + 1 — exclusive =
     * inclusive − ties, so no second cumsum pass is needed).
     *
-    * The result is localCheckpointed: it is a distinct-value frame
+    * The result is checkpointed: it is a distinct-value frame
     * (bounded by the value domain, not the row count) and the POINT of
     * this operator is amortization — q167 (KS) and q168 (Mann-Whitney)
     * consume the same build, and a session-resident engine computes it
@@ -244,7 +245,7 @@ object Stats {
         col("na_cum").as("ca"), col("nb_cum").as("cb"),
         (lit(2L) * (col("na_cum") + col("nb_cum") - col("na") - col("nb")) +
           col("na") + col("nb") + lit(1L)).as("r2"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
   }
 
   /** [[ksTwoSample]] over a prebuilt [[rankedPair]] frame — the
@@ -348,7 +349,7 @@ object Stats {
     import org.apache.spark.sql.expressions.Window
     val hist = per.groupBy(col(life))
       .agg(count(lit(1)).as("n_all"), sum(col(ev)).as("d"))
-      .localCheckpoint() // at-risk cumsum + event rows share it
+      .transform(GraftGlue.materialize(_)) // at-risk cumsum + event rows share it
     val before = Window.orderBy(col(life))
       .rowsBetween(Window.unboundedPreceding, -1)
     hist
@@ -413,7 +414,7 @@ object Stats {
         sum(when(col(grp) === 1, 1L).otherwise(0L)).as("c_1"),
         sum(col(ev)).as("d_all"),
         sum(when(col(grp) === 1, col(ev)).otherwise(0L)).as("d_1"))
-      .localCheckpoint() // at-risk cumsums + event rows share it
+      .transform(GraftGlue.materialize(_)) // at-risk cumsums + event rows share it
     val before = Window.orderBy(col(life))
       .rowsBetween(Window.unboundedPreceding, -1)
     val whole = Window.orderBy(col(life)).rowsBetween(
@@ -567,7 +568,7 @@ object Stats {
     * Hubert–Arabie hand example. */
   def clusterAri(lab: DataFrame, clusterCol: String,
                  labelCol: String): DataFrame = {
-    val l = lab.localCheckpoint() // cells + both marginals share it
+    val l = GraftGlue.materialize(lab) // cells + both marginals share it
     val cells = l.groupBy(col(clusterCol), col(labelCol))
       .agg(count(lit(1)).as("nij"))
     val sIj = cells.agg(sum(expr("(nij * (nij - 1)) div 2")).as("p_ij"),
@@ -791,7 +792,7 @@ object Stats {
     require(b >= 1, s"need at least one sign replicate: $b")
     val pairs = df.select(keyCol.cast("string").as("k"),
       diffCol.cast("long").as("diff"))
-      .localCheckpoint() // feeds T_obs AND the xB expansion
+      .transform(GraftGlue.materialize(_)) // feeds T_obs AND the xB expansion
     val tobs = pairs.agg(sum(col("diff")).as("t_obs"),
       count(lit(1)).as("n_pairs"))
     val flips = pairs
@@ -829,7 +830,7 @@ object Stats {
     require(b >= 1, s"need at least one sign replicate: $b")
     val pairs = df.select(grpCol.cast("string").as("g"),
       keyCol.cast("string").as("k"), diffCol.cast("long").as("diff"))
-      .localCheckpoint() // feeds per-group T_obs AND the xB expansion
+      .transform(GraftGlue.materialize(_)) // feeds per-group T_obs AND the xB expansion
     val tobs = pairs.groupBy(col("g"))
       .agg(sum(col("diff")).as("t_obs"), count(lit(1)).as("n_pairs"))
     val flips = pairs
@@ -868,7 +869,7 @@ object Stats {
     * family built from an aggregate/join executes its plan once for
     * the probe and once for the ranking pass (callers' family frames
     * are enum-bounded aggregates, so the extra pass is one cheap
-    * aggregate; pass a localCheckpoint'd frame to pay it only once) —
+    * aggregate; pass a checkpointed frame to pay it only once) —
     * and an over-cap family REFUSES instead of silently
     * single-threading a data-proportional input. Callers are
     * enum-bounded far below the default (q245 runs one test per

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** Time-series resample with gap-fill and forward-fill — the pandas
   * `resample(...).agg(...).ffill()` shape (the reference's dashboard
@@ -242,7 +243,7 @@ object TimeSeries {
     def d38(c: Column): Column = c.cast("decimal(38,0)")
     val ser = series.select(col(ord), col(value).as("x"))
       .withColumn("rn", row_number().over(Window.orderBy(col(ord))))
-      .localCheckpoint() // 3 bounded-frame consumers; never re-aggregate
+      .transform(GraftGlue.materialize(_)) // 3 bounded-frame consumers; never re-aggregate
     val glob = ser.agg(count(lit(1)).as("n"),
         sum(d38(col("x"))).as("s"),
         sum(d38(col("x")) * col("x")).as("sxx"))
@@ -288,9 +289,9 @@ object TimeSeries {
     require(maxLag >= 1, s"maxLag must be >= 1: $maxLag")
     def d38(c: Column): Column = c.cast("decimal(38,0)")
     val ac = a.select(col(ord).cast("long").as("day"), col(value).as("v"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val bc = b.select(col(ord).cast("long").as("day"), col(value).as("v"))
-      .localCheckpoint()
+      .transform(GraftGlue.materialize(_))
     val xs = ac.agg(count(lit(1)).as("nx"), sum(d38(col("v"))).as("sx"),
         sum(d38(col("v")) * col("v")).as("sxx"))
       .select(col("sxx"),
@@ -383,7 +384,7 @@ object TimeSeries {
       .withColumn("trend_micro",
         expr(s"(CAST(t2p AS DECIMAL(38,0)) * 1000000) div ${2 * period}"))
       .withColumn("detr", col(cents) * 1000000L - col("trend_micro"))
-      .localCheckpoint() // the seasonal means and the output share it
+      .transform(GraftGlue.materialize(_)) // the seasonal means and the output share it
     // 2 full cycles minimum (the statsmodels contract): fewer rows
     // would yield an all-NULL decomposition silently — the count reads
     // the checkpoint, so this loud guard costs nothing
@@ -395,7 +396,7 @@ object TimeSeries {
       // fold in decimal: a long sum of micro detrended values wraps
       // once phase-years × |detr| nears 2^63 (a 30-year daily series)
       .agg(expr("sum(CAST(detr AS DECIMAL(38,0))) div count(1)").as("s_raw"))
-      .localCheckpoint(eager = false) // both the adjust agg and join read it
+      .transform(GraftGlue.materialize(_, eager = false)) // both the adjust agg and join read it
     val sAdj = season
       .crossJoin(broadcast(season.agg(
         expr(s"sum(CAST(s_raw AS DECIMAL(38,0))) div $period").as("adj"))))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.operators.{Graph, Relational, TimeSeries}
@@ -48,7 +49,7 @@ object AnalyticsQueries {
             $"l_partkey" === $"p_partkey")
           .groupBy($"l_orderkey")
           .agg(sort_array(collect_set($"p_brand")).as("bs"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val n = sets.agg(count(lit(1)).as("n"))
         val marg = sets.select(explode($"bs").as("b"))
           .groupBy($"b").agg(count(lit(1)).as("c"))
@@ -141,7 +142,7 @@ object AnalyticsQueries {
             date_format($"ts", "EEEE").isin("Saturday", "Sunday")
               .cast("int").as("is_weekend"))
           .groupBy($"event_type", $"is_weekend").agg(count(lit(1)).as("n"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val rowT = cells.groupBy($"event_type").agg(sum($"n").as("rt"))
         val colT = cells.groupBy($"is_weekend").agg(sum($"n").as("ct"))
         val tot = cells.agg(sum($"n").as("tot"))
@@ -613,7 +614,7 @@ object AnalyticsQueries {
         // stages re-running the same journey windows)
         val pn = counts.join(rt, "s")
           .select($"s", $"t", expr("n * 1000000000L div rtot").as("pr"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val channels = Seq("click", "error", "signup", "view")
         val scTrans = channels.map { c =>
             pn.filter($"s" =!= c)
@@ -749,7 +750,7 @@ object AnalyticsQueries {
             $"l_partkey" === $"p_partkey")
           .groupBy($"l_orderkey")
           .agg(sort_array(collect_set($"p_brand")).as("bs"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val n = sets.agg(count(lit(1)).as("n"))
         val marg = sets.select(explode($"bs").as("b"))
           .groupBy($"b").agg(count(lit(1)).as("c"))
@@ -955,7 +956,7 @@ object AnalyticsQueries {
         val firsts = t(s, d, "events")
           .groupBy($"user_id", $"event_type")
           .agg(min($"ts").as("t0"))
-          .localCheckpoint() // both self-join sides read it
+          .transform(GraftGlue.materialize(_)) // both self-join sides read it
         firsts.select($"user_id", $"event_type".as("a"), $"t0".as("ta"))
           .join(firsts.select($"user_id", $"event_type".as("b"), $"t0".as("tb")),
             "user_id")
@@ -1092,7 +1093,7 @@ object AnalyticsQueries {
         val ev = t(s, d, "events")
         val v = ev.filter($"event_type" === "view")
           .groupBy($"user_id").agg(min($"ts").as("t0"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val p = ev.filter($"event_type" === "purchase")
           .select($"user_id".as("pu"), $"ts".as("pts"))
         val converted = v.join(p,
@@ -1138,16 +1139,16 @@ object AnalyticsQueries {
     "q256_funnel_steps" -> Q(
       (s, d) => {
         import s.implicits._
-        val ev = t(s, d, "events").localCheckpoint() // feeds all 3 type slices
+        val ev = GraftGlue.materialize(t(s, d, "events")) // feeds all 3 type slices
         val v = ev.filter($"event_type" === "view")
           .groupBy($"user_id").agg(min($"ts").as("t0"))
-          .localCheckpoint() // anchors transition 1 AND the outcome join
+          .transform(GraftGlue.materialize(_)) // anchors transition 1 AND the outcome join
         val c1 = v.join(ev.filter($"event_type" === "click")
               .select($"user_id".as("cu"), $"ts".as("cts")),
             $"user_id" === $"cu" && $"cts" > $"t0" &&
               $"cts" <= $"t0" + expr("INTERVAL 24 HOURS"))
           .groupBy($"user_id", $"t0").agg(min($"cts").as("t1"))
-          .localCheckpoint() // anchors transition 2 AND the outcome join
+          .transform(GraftGlue.materialize(_)) // anchors transition 2 AND the outcome join
         val c2 = c1.join(ev.filter($"event_type" === "purchase")
               .select($"user_id".as("pu"), $"ts".as("pts")),
             $"user_id" === $"pu" && $"pts" > $"t1" &&
@@ -1206,10 +1207,10 @@ object AnalyticsQueries {
         import s.implicits._
         val o = t(s, d, "orders").select($"o_custkey",
             (year($"o_orderdate") * 12 + month($"o_orderdate")).as("mk"))
-          .localCheckpoint() // feeds firsts AND the activity projection
+          .transform(GraftGlue.materialize(_)) // feeds firsts AND the activity projection
         val first = o.groupBy($"o_custkey").agg(min($"mk").as("cm"))
           .filter($"cm" >= 1995 * 12 + 1 && $"cm" <= 1995 * 12 + 12)
-          .localCheckpoint() // feeds sizes AND the activity join
+          .transform(GraftGlue.materialize(_)) // feeds sizes AND the activity join
         val sizes = first.groupBy($"cm").agg(count(lit(1)).as("cohort_size"))
         val active = o.join(first, "o_custkey")
           .select($"cm", ($"mk" - $"cm").cast("long").as("k"), $"o_custkey")

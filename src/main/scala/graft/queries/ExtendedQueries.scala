@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.functions.{Aggregators, TextFunctions}
@@ -598,7 +599,7 @@ object ExtendedQueries {
           .distinct()
           // three consumers (bench set, join probe, per-doc sizes) would
           // each recompute the explode+distinct — materialize it once
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val bench = sh.filter($"doc_id" < 50).select($"sh").distinct()
         val corpusSh = sh.filter($"doc_id" >= 50)
         corpusSh.join(broadcast(bench), "sh")

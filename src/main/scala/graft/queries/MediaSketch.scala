@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 /** The ONE materialized dHash sketch table (media_id, c0..c3) shared by
   * the perceptual-dedup consumers — q255 banded pairs and q257 clusters
@@ -94,7 +95,7 @@ object MediaSketch {
         .withColumn("mid",
           lit(3L) * (expr("video div 3") * 8 + $"f")
             + when($"p" === 2 && $"f" === 0, 1L).otherwise(0L))
-        .localCheckpoint() // feeds the distinct-codec pass AND the join
+        .transform(GraftGlue.materialize(_)) // feeds the distinct-codec pass AND the join
       val pngs = graft.multimodal.Multimodal.encodeVariantPngs(
         vf.select($"mid".as("doc_id")).distinct(), "doc_id")
       val grid = graft.multimodal.Multimodal.sampleGrayGrid(pngs)

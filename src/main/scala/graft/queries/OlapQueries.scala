@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.operators.{Dedup, Ranking, RangeJoin, Relational, Sketches}
@@ -264,7 +265,7 @@ object OlapQueries {
         // read 3x (pair shingles, node list, length join) — materialize
         // the 100-doc slice once (round-17 repeat-derivation sharing)
         val base = t(s, d, "documents").filter($"doc_id" < 100)
-          .select($"doc_id", $"text", $"n_chars").localCheckpoint()
+          .select($"doc_id", $"text", $"n_chars").transform(GraftGlue.materialize(_))
         val pairs = Dedup.sparseJaccardPairs(base, "doc_id",
           graft.functions.TextFunctions.charNGrams($"text", 3), threshold = 0.6)
         // r18: ≤ 100 nodes by construction — driver union-find (bounded-
@@ -646,7 +647,7 @@ object OlapQueries {
         val li = t(s, d, "lineitem")
           .select($"l_returnflag".as("flag"),
             round($"l_extendedprice" * 100).cast("long").as("c"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         // ONE range scan feeds BOTH selections: the median phase takes
         // it as its hint, and the MAD phase's deviation range derives
         // arithmetically — adev2 = |2c − med2| ∈ [0, max(|2lo − med2|,
@@ -1047,7 +1048,7 @@ object OlapQueries {
             $"l_partkey" === $"p_partkey")
           .select($"l_orderkey".as("ok"), $"p_brand".as("b"))
           .groupBy($"ok").agg(collect_set($"b").as("bs"))
-          .localCheckpoint() // feeds N, singles and the pair expansion
+          .transform(GraftGlue.materialize(_)) // feeds N, singles and the pair expansion
         val n = baskets.agg(count(lit(1)).as("n_baskets"))
         val singles = baskets.select(explode($"bs").as("b"))
           .groupBy($"b").agg(count(lit(1)).as("supp"))

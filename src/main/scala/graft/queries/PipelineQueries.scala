@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.functions.TextFunctions
@@ -523,7 +524,7 @@ object PipelineQueries {
             when(conv(substring(md5(concat(lit("q195:"), $"source")), 1, 15), 16, 10)
               .cast("long") % 100 < 80, "train").otherwise("test"))
           .withColumn("fp", TextFunctions.fingerprint($"text"))
-          .localCheckpoint() // feeds the split totals AND the fp audit
+          .transform(GraftGlue.materialize(_)) // feeds the split totals AND the fp audit
         val totals = assigned.groupBy($"split")
           .agg(countDistinct($"source").as("gs"), count(lit(1)).as("docs"),
             sum(TextFunctions.wordCount($"text")).as("toks"))
@@ -647,7 +648,7 @@ object PipelineQueries {
           .withColumn("variant",
             when(conv(substring(md5(concat(lit("q198:"), $"o_custkey".cast("string"))),
               1, 15), 16, 10).cast("long") % 2 === 0, "control").otherwise("treatment"))
-          .localCheckpoint() // feeds the pooled moments AND the variant rows
+          .transform(GraftGlue.materialize(_)) // feeds the pooled moments AND the variant rows
         val pooled = per.agg(count(lit(1)).as("n"),
             sum(d38($"x")).as("sx"), sum(d38($"y")).as("sy"),
             sum(d38($"x") * d38($"y")).as("sxy"),
@@ -907,7 +908,7 @@ object PipelineQueries {
           .filter(year($"o_orderdate") === 1995)
           .groupBy(to_date($"o_orderdate").as("day"))
           .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("c"))
-          .localCheckpoint() // baseline scalar + detection windows reuse it
+          .transform(GraftGlue.materialize(_)) // baseline scalar + detection windows reuse it
         val base = daily.filter($"day" < "1995-07-01")
           .agg(expr("sum(c) div count(*)").as("mu"))
         val w = Window.orderBy($"day")
@@ -1178,7 +1179,7 @@ object PipelineQueries {
               .cast("long").as("band"),
             ($"o_orderstatus" === "F").cast("long").as("bad"))
           .groupBy($"band", $"bad").agg(count(lit(1)).as("n_bs"))
-          .localCheckpoint() // marginals + cells from one aggregate
+          .transform(GraftGlue.materialize(_)) // marginals + cells from one aggregate
         val bandTot = cells.groupBy($"band").agg(sum($"n_bs").as("n_b"))
         val clsTot = cells.groupBy($"bad").agg(sum($"n_bs").as("n_s"))
         val tot = cells.agg(sum($"n_bs").as("nn"))
@@ -1357,7 +1358,7 @@ object PipelineQueries {
         val bins = scored.groupBy($"bin")
           .agg(count(lit(1)).as("n"), sum($"p_micro").as("sp"),
             sum($"y").as("sy"))
-          .localCheckpoint() // ybar + per-bin rows share the aggregate
+          .transform(GraftGlue.materialize(_)) // ybar + per-bin rows share the aggregate
         val tot = bins.agg(sum($"n").as("nn"), sum($"sy").as("syy"))
         bins.crossJoin(broadcast(tot))
           .select($"bin", $"n",
@@ -1475,7 +1476,7 @@ object PipelineQueries {
               1, 15), 16, 10).cast("long") % 100)
           .withColumn("split",
             when($"u" < 70, "train").when($"u" < 85, "cal").otherwise("test"))
-          .localCheckpoint() // three splits read from one hashed frame
+          .transform(GraftGlue.materialize(_)) // three splits read from one hashed frame
         val center = o.filter($"split" === "train")
           .groupBy($"prio")
           .agg(count(lit(1)).as("n_train"), expr("sum(cents) div count(*)").as("c0"))
@@ -1676,7 +1677,7 @@ object PipelineQueries {
         // read 3x (pair shingles, node list, label join) — materialize
         // the 100-doc slice once (round-17 repeat-derivation sharing)
         val base = t(s, d, "documents").filter($"doc_id" < 100)
-          .select($"doc_id", $"text", $"source").localCheckpoint()
+          .select($"doc_id", $"text", $"source").transform(GraftGlue.materialize(_))
         val pairs = Dedup.sparseJaccardPairs(base, "doc_id",
           TextFunctions.charNGrams($"text", 3), threshold = 0.6)
         // r18: the slice is structurally ≤ 100 nodes — the audit's CC is
@@ -1788,7 +1789,7 @@ object PipelineQueries {
         val daily = t(s, d, "orders").filter(year($"o_orderdate") === 1995)
           .groupBy(to_date($"o_orderdate").as("day"), $"o_orderpriority".as("prio"))
           .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("rev"))
-          .localCheckpoint() // both self-join sides read it
+          .transform(GraftGlue.materialize(_)) // both self-join sides read it
         val a = daily.select($"day", $"prio".as("i"), $"rev".as("ra"))
         val b = daily.select($"day", $"prio".as("j"), $"rev".as("rb"))
         val wins = a.join(b, Seq("day")).filter($"i" =!= $"j")
@@ -2089,7 +2090,7 @@ object PipelineQueries {
               .cast("long").as("r_days"),
             count(lit(1)).as("f"),
             graft.operators.Relational.centsSum($"o_totalprice").as("m"))
-          .localCheckpoint() // feeds the quantile build + the scoring pass
+          .transform(GraftGlue.materialize(_)) // feeds the quantile build + the scoring pass
         // ONE three-metric quantile build (round-17: the multi-column
         // engine folds the former 3 per-metric builds — 9 histogram
         // passes — into 3)
@@ -2240,7 +2241,7 @@ object PipelineQueries {
               .cast("long") % 2).as("treat"))
           .join(buyers.withColumn("conv", lit(1L)), Seq("c_custkey"), "left")
           .select($"cents", $"treat", coalesce($"conv", lit(0L)).as("conv"))
-          .localCheckpoint() // feeds the quantile engine AND bucketing
+          .transform(GraftGlue.materialize(_)) // feeds the quantile engine AND bucketing
         val bounds = Relational.exactQuantilesQuantized(
             base, "cents", (1 to 9).map(_ / 10.0), scale = 1,
             // r18: acctbal cents — bounded money domain; one-pass engine
@@ -2355,7 +2356,7 @@ object PipelineQueries {
               $"l_orderkey".cast("string"), lit(":"),
               $"l_linenumber".cast("string"))), 1, 15), 16, 10)
               .cast("long") % 2).as("calib"))
-          .localCheckpoint() // feeds rate, residual hist, test coverage
+          .transform(GraftGlue.materialize(_)) // feeds rate, residual hist, test coverage
         val rate = li.filter($"calib" === 1)
           .agg(expr("sum(cents) div sum(qty)").as("rate"))
         val hist = li.filter($"calib" === 1).crossJoin(broadcast(rate))

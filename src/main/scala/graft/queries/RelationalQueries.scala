@@ -163,8 +163,7 @@ object RelationalQueries {
         import s.implicits._
         // r18: domainBounded — cents of a bounded money domain; the
         // engine's one-pass value-histogram path (identical results)
-        Relational.iqrFilter(t(s, d, "lineitem"), "l_extendedprice",
-            reuseScan = true, domainBounded = true)
+        Relational.iqrFilter(t(s, d, "lineitem"), "l_extendedprice", domainBounded = true)
           .agg(count(lit(1)).as("n_kept"),
                moneySum($"l_extendedprice").as("sum_kept"),
                round(avg($"l_extendedprice"), 6).as("avg_kept"))
@@ -196,7 +195,7 @@ object RelationalQueries {
     "q09_summary_stats" -> Q(
       // r18: domainBounded — money cents; one-pass quartile path
       (s, d) => Relational.summaryStats(t(s, d, "lineitem"), "l_extendedprice",
-        reuseScan = true, domainBounded = true),
+        domainBounded = true),
       Some("""SELECT count(l_extendedprice) AS n,
         round(avg(l_extendedprice),6) AS mean,
         round(stddev_samp(l_extendedprice),6) AS sd,

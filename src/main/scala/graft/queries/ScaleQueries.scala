@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.operators.{AsOf, Incremental, Layout, Quality, Redact, Relational, Selection, Sketches, TimeSeries}
@@ -770,7 +771,7 @@ object ScaleQueries {
           .select((substring($"source", 4, 10).cast("int") < 10).as("side_a"),
             explode(split(lower($"text"), " ")).as("w"))
           .filter($"w".rlike("^[a-z0-9]+$"))
-          .localCheckpoint() // reused: two sketch builds + exact pass
+          .transform(GraftGlue.materialize(_)) // reused: two sketch builds + exact pass
         val sk = Sketches.kmvSetOps(
           w.filter($"side_a"), $"w", w.filter(!$"side_a"), $"w",
           k = 256, salt = "q151")

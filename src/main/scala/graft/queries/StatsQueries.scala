@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.operators.{Relational, Stats}
@@ -312,7 +313,7 @@ object StatsQueries {
         // engines at this row count.
         val li = t(s, d, "lineitem")
           .select(round($"l_extendedprice" * 100).cast("long").as("cents"))
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         val bounds = Relational.exactQuantilesQuantized(
             li, "cents", (1 to 7).map(_ / 8.0), scale = 1,
             // r18: cents of a bounded money domain — the one-pass
@@ -681,7 +682,7 @@ object StatsQueries {
           .groupBy(datediff($"o_orderdate", lit("1996-01-01"))
             .cast("long").as("day"))
           .agg(Relational.centsSum($"o_totalprice").as("cents"))
-          .localCheckpoint() // ≤366 rows feed 4 derivations: 1 scan, not 4
+          .transform(GraftGlue.materialize(_)) // ≤366 rows feed 4 derivations: 1 scan, not 4
         val a = ser.select($"day".as("d1"), $"cents".as("c1"))
         val b = ser.select($"day".as("d2"), $"cents".as("c2"))
         val pairs = a.join(broadcast(b), col("d1") < col("d2"))
@@ -762,7 +763,7 @@ object StatsQueries {
             sum($"treat").cast("long").as("n1"),
             sum(when($"treat" === 1, $"y")).as("s1"),
             sum(when($"treat" === 0, $"y")).as("s0"))
-          .localCheckpoint() // enum-sized; kept/glob/ipw-broadcast read it
+          .transform(GraftGlue.materialize(_)) // enum-sized; kept/glob/ipw-broadcast read it
           // (without it each consumer re-derives the orders⋈customer
           // aggregate: 4 scans of each table where the declared two
           // passes — stratum build + per-row IPW — need only 2)
@@ -1109,7 +1110,7 @@ object StatsQueries {
           // the whole B=64 sign-flip expansion a second time — the exact
           // double-pass the operator doc tells callers to avoid (the
           // round-14 q245 drift, measured and fixed here)
-          .localCheckpoint()
+          .transform(GraftGlue.materialize(_))
         // BH step-up over the nation-bounded frame (Stats.bhStepUp —
         // hand-pinned in StatsSpec incl. the rank-rescue property)
         Stats.bhStepUp(tests, $"n_extreme" + 1, $"nat",

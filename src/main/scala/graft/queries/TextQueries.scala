@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.functions.TextFunctions._
@@ -646,7 +647,7 @@ object TextQueries {
             langId(coalesce($"en", lit(0L)), coalesce($"de", lit(0L)),
               coalesce($"es", lit(0L)), coalesce($"fr", lit(0L))).as("pred"))
           .groupBy($"lang", $"pred").agg(count(lit(1)).as("n"))
-          .localCheckpoint() // diag + both marginals share it
+          .transform(GraftGlue.materialize(_)) // diag + both marginals share it
         val agree = conf.filter($"lang" === $"pred")
           .agg(coalesce(sum($"n"), lit(0L)).as("n_agree"))
         def d38(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
@@ -839,7 +840,7 @@ object TextQueries {
         import s.implicits._
         val base = docs(s, d)
         val keep = Dedup.exactKeepers(base, "doc_id", "text")
-          .localCheckpoint() // read 3x: keeper filter + both copy joins
+          .transform(GraftGlue.materialize(_)) // read 3x: keeper filter + both copy joins
         val kept = base.join(
           keep.select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
         // STAYS LIVE by measured A/B (round-18, the q271 stay-live
@@ -1634,7 +1635,7 @@ object TextQueries {
         import s.implicits._
         val base = docs(s, d)
         val keep = Dedup.exactKeepers(base, "doc_id", "text")
-          .localCheckpoint() // read 3x: keeper filter + both copy joins
+          .transform(GraftGlue.materialize(_)) // read 3x: keeper filter + both copy joins
         val kept = base.join(
           keep.select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
         // deliberately NOT store-fed (unlike q269/q270): the
@@ -1770,7 +1771,7 @@ object TextQueries {
         import s.implicits._
         val base = docs(s, d)
         val keep = Dedup.exactKeepers(base, "doc_id", "text")
-          .localCheckpoint() // read twice: keeper filter + copy-count join
+          .transform(GraftGlue.materialize(_)) // read twice: keeper filter + copy-count join
         val kept = base.join(
           keep.select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
         // deliberately NOT store-fed (unlike q273/q282): the
@@ -1831,7 +1832,7 @@ object TextQueries {
         import s.implicits._
         val base = docs(s, d)
         val keep = Dedup.exactKeepers(base, "doc_id", "text")
-          .localCheckpoint() // read twice: keeper filter + copy-count join
+          .transform(GraftGlue.materialize(_)) // read twice: keeper filter + copy-count join
         val kept = base.join(
           keep.select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
         Dedup.substringDedupRolling(kept, "doc_id", "text", width = 40)
@@ -1984,7 +1985,7 @@ object TextQueries {
         import s.implicits._
         val base = docs(s, d)
         val keep = Dedup.exactKeepers(base, "doc_id", "text")
-          .localCheckpoint() // read 3x: keeper filter + both copy joins
+          .transform(GraftGlue.materialize(_)) // read 3x: keeper filter + both copy joins
         val kept = base.join(
           keep.select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
         // store-fed by measured A/B (round-18): the tf store replaces
@@ -2069,7 +2070,7 @@ object TextQueries {
         val kept = base.join(
           Dedup.exactKeepers(base, "doc_id", "text")
             .select($"keeper_id".as("doc_id")), Seq("doc_id"), "inner")
-          .localCheckpoint() // read twice: query construction + corpus
+          .transform(GraftGlue.materialize(_)) // read twice: query construction + corpus
         val ws = words($"text")
         val snippet = array_join(concat(
           slice(ws, 3, 7), array(lit("zzedit")), slice(ws, 11, 12)), " ")
@@ -2140,7 +2141,7 @@ object TextQueries {
         // read twice (pair shingles, node list) — materialize the
         // 100-doc slice once (round-17 repeat-derivation sharing)
         val base = docs(s, d).filter($"doc_id" < 100)
-          .select($"doc_id", $"text").localCheckpoint()
+          .select($"doc_id", $"text").transform(GraftGlue.materialize(_))
         val pairs = Dedup.sparseJaccardPairs(base, "doc_id",
           charNGrams($"text", 3), threshold = 0.6)
         // r18: ≤ 100 nodes by construction — driver union-find (bounded-
@@ -2348,7 +2349,7 @@ object TextQueries {
           .select($"source", explode(split(lower($"text"), " ")).as("w"))
           .filter($"w".rlike("^[a-z0-9]+$"))
           .groupBy($"source", $"w").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint() // reused: global vocab + token join-back
+          .transform(GraftGlue.materialize(_)) // reused: global vocab + token join-back
         val vocab = sw.groupBy($"w").agg(sum($"cnt").as("freq"))
         val tok = graft.operators.Bpe.encodeVocab(vocab, "w", "freq", rounds = 6)
           .select(col("word").as("w"), col("n_tokens"))
@@ -2435,7 +2436,7 @@ object TextQueries {
           .select($"doc_id", $"source",
             posexplode(split(lower($"text"), " ")).as(Seq("pos", "w")))
           .filter($"w".rlike("^[a-z0-9]+$"))
-          .localCheckpoint() // reused: vocab + the sampled pass
+          .transform(GraftGlue.materialize(_)) // reused: vocab + the sampled pass
         val n = occ.agg(count(lit(1)).as("n_total"))
         val vocab = occ.groupBy($"w").agg(count(lit(1)).as("f"))
           .crossJoin(broadcast(n))
@@ -2590,7 +2591,7 @@ object TextQueries {
         val counts = docs(s, d)
           .select($"lang", explode(words($"text")).as("w"))
           .groupBy($"lang", $"w").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // vocab, langs, totals and dense share it
+          .transform(GraftGlue.materialize(_)) // vocab, langs, totals and dense share it
         val vocab = counts.select($"w").distinct()
         val nv = vocab.agg(count(lit(1)).as("vv"))
         val langs = counts.select($"lang").distinct()
@@ -2602,7 +2603,7 @@ object TextQueries {
           .select($"lang", $"w", $"n", $"vv",
             ((coalesce($"c", lit(0L)) + 1).cast("double") / ($"n" + $"vv"))
               .as("p"))
-          .localCheckpoint(eager = false) // both pair sides read it
+          .transform(GraftGlue.materialize(_, eager = false)) // both pair sides read it
         val a = dense.select($"lang".as("lang_a"), $"w",
           $"n".as("n_a"), $"vv", $"p".as("pa"))
         val b = dense.select($"lang".as("lang_b"), $"w",
@@ -2666,7 +2667,7 @@ object TextQueries {
             (x, y) => struct(x.as("w1"), y.as("w2")))).as("bg"))
           .select($"bg.w1", $"bg.w2")
         val c = big.groupBy($"w1", $"w2").agg(count(lit(1)).as("c"))
-          .localCheckpoint() // left/right/total marginals + the join read it
+          .transform(GraftGlue.materialize(_)) // left/right/total marginals + the join read it
         val left = c.groupBy($"w1")
           .agg(sum($"c").as("c1"), count(lit(1)).as("n1p_l"))
         val right = c.groupBy($"w2").agg(count(lit(1)).as("n1p_r"))
@@ -2769,7 +2770,7 @@ object TextQueries {
               expr("size(split(lower(text), ' ')) div 8").cast("string"))
               .as("blk"))
           .transform(Relational.spread(_, col("blk"))) // vs AQE coalesce
-          .localCheckpoint() // feeds block sizes AND both join sides
+          .transform(GraftGlue.materialize(_)) // feeds block sizes AND both join sides
         val okBlocks = base.groupBy($"blk").agg(count(lit(1)).as("n"))
           .filter($"n" <= 200) // stop-block cap: a degenerate hot block
           .select($"blk")      // (shared boilerplate head) is skipped

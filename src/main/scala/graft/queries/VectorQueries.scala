@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.Tables
 import graft.operators.{Dedup, Similarity}
@@ -751,7 +752,7 @@ object VectorQueries {
         // two consumers (query row + candidate side) — materialize the
         // projection once or the 16-aggregate pass runs twice
         val proj = Similarity.jlProject(emb(s, d), "vec_id", "embedding",
-          k = 16, dims = 64).localCheckpoint()
+          k = 16, dims = 64).transform(GraftGlue.materialize(_))
         val qry = proj.filter($"vec_id" === 0)
           .select($"r", $"y".as("yq"))
         proj.filter($"vec_id" =!= 0)

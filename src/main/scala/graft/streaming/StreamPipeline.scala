@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
@@ -335,29 +336,43 @@ object StreamPipeline {
                                 minShared: Int = 3,
                                 maxPosting: Int = 200): (DataFrame, Long) => Unit = {
     import graft.operators.Dedup
+    countThresholdWriter(indexDir, outDir, id, minShared, maxPosting) { b =>
+      // scheme pin: the persisted fingerprints are (k, w)-dependent —
+      // a reopened writer with either drifted derives values that
+      // match NOTHING in the index and admits every duplicate, the
+      // silent-total failure the marker refuses. minShared and
+      // maxPosting are deliberately NOT pinned: they are read-side
+      // POLICY over scheme-stable rows (every hash still compares;
+      // retuning the threshold mid-stream is a legitimate, visible
+      // operation — the posting-cap A/B spec reopens one index under
+      // different thresholds by design, and seeding a posting-2 cap
+      // fixture is impossible under a pinned threshold)
+      pinIndexScheme(b.sparkSession, indexDir, "_scheme",
+        s"winnow k=$k w=$w")
+      Dedup.winnowedFingerprints(b.select(col(id), col(text)), id,
+          col(text), k, w)
+        .select(col(id), lit(0).as("band_idx"),
+          col("fp").cast("string").as("band_hash"))
+        .distinct() // count DISTINCT shared hashes — q270's rule
+    }
+  }
+
+  /** The count-threshold rule shared by [[winnowDedupSuppressWriter]]
+    * and [[cdcDedupSuppressWriter]]: an arrival is dropped when it
+    * shares ≥ `minShared` of its (distinct, per doc) `bucketsOf` hashes
+    * with ONE admitted document, postings held by more than
+    * `maxPosting` admitted docs skipped before the join. Within a batch
+    * the larger id of any ≥ `minShared` pair drops, even when its
+    * partner is itself suppressed by an earlier arrival (the image
+    * writer's pairwise keep-first convention) — within-batch postings
+    * are bounded by micro-batch size. */
+  private def countThresholdWriter(indexDir: String, outDir: String, id: String,
+                                   minShared: Int, maxPosting: Int)
+                                  (bucketsOf: DataFrame => DataFrame): (DataFrame, Long) => Unit = {
     require(minShared >= 1, s"minShared must be >= 1: $minShared")
     require(maxPosting >= 1,
       s"maxPosting=$maxPosting: a cap below 1 drops every posting")
-    bucketSuppressWriter(indexDir, outDir, id,
-      bucketsOf = { b =>
-        // scheme pin: the persisted fingerprints are (k, w)-dependent —
-        // a reopened writer with either drifted derives values that
-        // match NOTHING in the index and admits every duplicate, the
-        // silent-total failure the marker refuses. minShared and
-        // maxPosting are deliberately NOT pinned: they are read-side
-        // POLICY over scheme-stable rows (every hash still compares;
-        // retuning the threshold mid-stream is a legitimate, visible
-        // operation — the posting-cap A/B spec reopens one index under
-        // different thresholds by design, and seeding a posting-2 cap
-        // fixture is impossible under a pinned threshold)
-        pinIndexScheme(b.sparkSession, indexDir, "_scheme",
-          s"winnow k=$k w=$w")
-        Dedup.winnowedFingerprints(b.select(col(id), col(text)), id,
-            col(text), k, w)
-          .select(col(id), lit(0).as("band_idx"),
-            col("fp").cast("string").as("band_hash"))
-          .distinct() // count DISTINCT shared hashes — q270's rule
-      },
+    bucketSuppressWriter(indexDir, outDir, id, bucketsOf,
       hitExistingOf = { (b, idx) =>
         val bounded = idx.join(
           idx.groupBy(col("band_hash")).agg(count(lit(1)).as("__df"))
@@ -373,10 +388,6 @@ object StreamPipeline {
           .select(col(id))
       },
       hitWithinOf = { b =>
-        // pairwise keep-first: the larger id of any >= minShared pair
-        // drops, even when its partner is itself suppressed by an
-        // earlier arrival (the image writer's pairwise convention) —
-        // within-batch postings are bounded by micro-batch size
         val l = b.select(col(id).as("__a"), col("band_hash"))
         val r = b.select(col(id).as("__b"), col("band_hash"))
         l.join(r, Seq("band_hash"))
@@ -427,43 +438,14 @@ object StreamPipeline {
                              minShared: Int = 2,
                              maxPosting: Int = 200): (DataFrame, Long) => Unit = {
     import graft.operators.Curation
-    require(minShared >= 1, s"minShared must be >= 1: $minShared")
-    require(maxPosting >= 1,
-      s"maxPosting=$maxPosting: a cap below 1 drops every posting")
-    bucketSuppressWriter(indexDir, outDir, id,
-      bucketsOf = { b =>
-        pinIndexScheme(b.sparkSession, indexDir, "_scheme",
-          s"cdc w=$w den=$den")
-        Curation.cdcChunks(b.select(col(id), col(text)), id, text, w, den)
-          .select(col(id), lit(0).as("band_idx"),
-            col("chunk_md5").as("band_hash"))
-          .distinct() // count DISTINCT shared chunk hashes per pair
-      },
-      hitExistingOf = { (b, idx) =>
-        val bounded = idx.join(
-          idx.groupBy(col("band_hash")).agg(count(lit(1)).as("__df"))
-            .filter(col("__df") <= maxPosting)
-            .select(col("band_hash")),
-          Seq("band_hash"), "left_semi")
-        b.select(col(id), col("band_hash"))
-          .join(bounded.select(col("band_hash"), col(id).as("__other")),
-            Seq("band_hash"))
-          .groupBy(col(id), col("__other"))
-          .agg(count(lit(1)).as("__sh"))
-          .filter(col("__sh") >= minShared)
-          .select(col(id))
-      },
-      hitWithinOf = { b =>
-        // pairwise keep-first (the winnow/image writers' convention)
-        val l = b.select(col(id).as("__a"), col("band_hash"))
-        val r = b.select(col(id).as("__b"), col("band_hash"))
-        l.join(r, Seq("band_hash"))
-          .filter(col("__a") < col("__b"))
-          .groupBy(col("__a"), col("__b"))
-          .agg(count(lit(1)).as("__sh"))
-          .filter(col("__sh") >= minShared)
-          .select(col("__b").as(id))
-      })
+    countThresholdWriter(indexDir, outDir, id, minShared, maxPosting) { b =>
+      pinIndexScheme(b.sparkSession, indexDir, "_scheme",
+        s"cdc w=$w den=$den")
+      Curation.cdcChunks(b.select(col(id), col(text)), id, text, w, den)
+        .select(col(id), lit(0).as("band_idx"),
+          col("chunk_md5").as("band_hash"))
+        .distinct() // count DISTINCT shared chunk hashes per pair
+    }
   }
 
   /** Substring SCRUB at ingest — the streaming face of the batch
@@ -529,7 +511,7 @@ object StreamPipeline {
           // delta need it — materialize once, feed both (round-15
           // self-review catch; previously each job re-ran the explode)
           val wins = Dedup.substringWindowHashes(b, id, text, width)
-            .localCheckpoint()
+            .transform(GraftGlue.materialize(_))
           Dedup.substringScrub(b, id, text, width, seen, Some(wins))
             .write.mode(SaveMode.Overwrite).parquet(s"$outDir/$name")
           wins
@@ -566,9 +548,22 @@ object StreamPipeline {
   def seedSubstringIndex(spark: SparkSession, indexDir: String,
                          bench: DataFrame, id: String, text: String,
                          width: Int = 40): Unit = {
-    import graft.io.Fs
     import graft.operators.Dedup
-    pinIndexScheme(spark, indexDir, "_scheme", s"substring width=$width")
+    seedBase(spark, indexDir, s"substring width=$width") {
+      Dedup.substringWindowHashes(
+          bench.select(col(id), col(text)), id, text, width)
+        .select(col(id), lit(0).as("band_idx"), col("wh").as("band_hash"))
+        .distinct()
+    }
+  }
+
+  /** Pins `scheme`, refuses an index that already holds a promoted
+    * generation, then writes `rows` as the promoted `base-0` with an
+    * empty-coverage meta — the create-time step every seeder shares. */
+  private def seedBase(spark: SparkSession, indexDir: String, scheme: String)
+                      (rows: => DataFrame): Unit = {
+    import graft.io.Fs
+    pinIndexScheme(spark, indexDir, "_scheme", scheme)
     // refuse ANY promoted generation, not just gen 0: readers union
     // only the NEWEST base, so seeding under an existing base-N would
     // leave base-0 permanently invisible — a silent no-op seed
@@ -576,11 +571,7 @@ object StreamPipeline {
     require(bases.isEmpty,
       s"$indexDir already holds promoted generation(s) " +
         s"${bases.mkString(", ")} — seed only a fresh index")
-    Dedup.substringWindowHashes(
-        bench.select(col(id), col(text)), id, text, width)
-      .select(col(id), lit(0).as("band_idx"), col("wh").as("band_hash"))
-      .distinct()
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/base-0")
+    rows.write.mode(SaveMode.Overwrite).parquet(s"$indexDir/base-0")
     // empty covered set: every writer delta stays visible alongside
     Fs.writeTextAtomic(spark, s"$indexDir/base-0.meta", "")
   }
@@ -616,21 +607,14 @@ object StreamPipeline {
   def seedWinnowIndex(spark: SparkSession, indexDir: String,
                       bench: DataFrame, id: String, text: String,
                       k: Int = 4, w: Int = 4): Unit = {
-    import graft.io.Fs
     import graft.operators.Dedup
-    pinIndexScheme(spark, indexDir, "_scheme", s"winnow k=$k w=$w")
-    val bases = Fs.listWithSuffix(spark, indexDir, ".meta")
-    require(bases.isEmpty,
-      s"$indexDir already holds promoted generation(s) " +
-        s"${bases.mkString(", ")} — seed only a fresh index")
-    Dedup.winnowedFingerprints(bench.select(col(id), col(text)), id,
-        col(text), k, w)
-      .select(col(id), lit(0).as("band_idx"),
-        col("fp").cast("string").as("band_hash"))
-      .distinct() // the writer's row shape: distinct hashes per doc
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/base-0")
-    // empty covered set: every writer delta stays visible alongside
-    Fs.writeTextAtomic(spark, s"$indexDir/base-0.meta", "")
+    seedBase(spark, indexDir, s"winnow k=$k w=$w") {
+      Dedup.winnowedFingerprints(bench.select(col(id), col(text)), id,
+          col(text), k, w)
+        .select(col(id), lit(0).as("band_idx"),
+          col("fp").cast("string").as("band_hash"))
+        .distinct() // the writer's row shape: distinct hashes per doc
+    }
   }
 
   /** [[bucketSuppressWriter]] on the IMAGE modality (round-14): each

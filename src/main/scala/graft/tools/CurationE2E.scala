@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftGlue
 
 import graft.{Session, Tables}
 import graft.functions.TextFunctions
@@ -111,7 +112,7 @@ import graft.operators.{Curation, Dedup}
   *                        checksum — the corpus leaves the pipeline as
   *                        the 16 shard files training actually reads.
   *
-  * Every leg ends in an eager localCheckpoint + count, so each wall
+  * Every leg ends in an eager checkpoint + count, so each wall
   * time covers exactly its own stage (no lazy-plan bleed into the next
   * leg). Legs reuse the registered operators/shapes — nothing here is
   * a shell. Wall-clock + counts are the artifact, as in `E2E.json`.
@@ -175,9 +176,7 @@ object CurationE2E {
         // ~4× the leg's output in the block manager until GC) — only
         // the FINAL pass's frame flows downstream, so earlier passes
         // are dead weight the moment they are re-run
-        if (last != null)
-          org.apache.spark.sql.graftglue.GraftGlue
-            .unpersistLocalCheckpoint(last._1)
+        if (last != null) GraftGlue.unpersistLocalCheckpoint(last._1)
         val t0 = System.nanoTime()
         last = body
         times += (System.nanoTime() - t0) / 1e9
@@ -189,7 +188,7 @@ object CurationE2E {
       last._1
     }
     // eager materialization: each leg pays for exactly its own work
-    def mat(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def mat(df: DataFrame): DataFrame = GraftGlue.materialize(df)
     def census(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), sum(TextFunctions.wordCount($"text")))
         .head()

@@ -15,8 +15,8 @@ import graft.streaming.StreamPipeline
   * Prints one DEMO line per module; used by the verify recipe. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = Session.local("graft-demo", cores = 4)
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = Session.local("graft-demo", cores = 4,
+      conf = Map("spark.log.level" -> "ERROR"))
     import spark.implicits._
 
     // 1 — streaming: memory source → consumer transform → foreachBatch sink

@@ -84,121 +84,125 @@ object E2E {
         round(col("fare_amount") + col("tip_amount") + lit(1.0), 2))
       .drop("id", "pu_ts", "do_ts", "duration_min")
     val workDir = Files.createTempDirectory("graft_e2e").toString
-    val fixtureDir = s"$workDir/trips_raw"
-    base.write.mode("overwrite").parquet(fixtureDir)
+    try {
+      val fixtureDir = s"$workDir/trips_raw"
+      base.write.mode("overwrite").parquet(fixtureDir)
 
-    val legs = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Double, Long)]
-    def timed[T](name: String)(body: => (T, Long)): T = {
-      val t0 = System.nanoTime()
-      val (v, n) = body
-      legs += ((name, (System.nanoTime() - t0) / 1e9, n))
-      v
-    }
-
-    // ---- leg 1: producer — parquet scan → JSON rows on the driver ----
-    val jsonRows = timed("produce_json") {
-      val js = spark.read.parquet(fixtureDir)
-        .select(to_json(struct(col("*"))).as("value"))
-        .as[String].collect()
-      (js, js.length.toLong)
-    }
-
-    // ---- leg 2: streaming decode → enrich → Derby append ----
-    System.setProperty("derby.stream.error.file", s"$workDir/derby.log")
-    val url = s"jdbc:derby:$workDir/tripsdb;create=true"
-    val schema = StructType(spark.read.parquet(fixtureDir).schema.fields.toSeq)
-    timed("stream_enrich_jdbc") {
-      val ms = MemoryStream[String]
-      val q = StreamPipeline.foreachBatchSink(
-        StreamPipeline.consumerTransform(ms.toDF(), schema),
-        s"$workDir/ckpt",
-        (batch, _) => graft.io.Sinks.jdbcAppend(
-          batch, url, "trips_enriched", "app", "app"))
-      jsonRows.grouped((jsonRows.length / 10).max(1)).foreach { chunk =>
-        ms.addData(chunk.toSeq: _*)
-        q.processAllAvailable()
+      val legs = scala.collection.mutable.ArrayBuffer
+        .empty[(String, Double, Long)]
+      def timed[T](name: String)(body: => (T, Long)): T = {
+        val t0 = System.nanoTime()
+        val (v, n) = body
+        legs += ((name, (System.nanoTime() - t0) / 1e9, n))
+        v
       }
-      q.stop()
-      // report what actually LANDED: foreachBatchSink catch-log-drops a
-      // failed batch (reference parity), so the requested row count
-      // would overstate the measured flow after any sink error
-      val landed = graft.io.Sources.jdbc(spark, url, "trips_enriched",
-        "app", "app").count()
-      ((), landed)
-    }
 
-    // ---- leg 3: partitioned JDBC read-back ----
-    val trips = timed("jdbc_read") {
-      val df = graft.io.Sources.jdbc(spark, url, "trips_enriched",
-        "app", "app", partitionColumn = Some("pickup_hour"),
-        lowerBound = 0L, upperBound = 24L, numPartitions = 4)
-      (df, df.count())
-    }
+      // ---- leg 1: producer — parquet scan → JSON rows on the driver ----
+      val jsonRows = timed("produce_json") {
+        val js = spark.read.parquet(fixtureDir)
+          .select(to_json(struct(col("*"))).as("value"))
+          .as[String].collect()
+        (js, js.length.toLong)
+      }
 
-    // ---- leg 4: train + eval + save at reference hyperparameters ----
-    val numericCols = Seq("vendorid", "ratecodeid", "pulocationid",
-      "dolocationid", "passenger_count", "trip_distance", "tip_amount",
-      "improvement_surcharge", "total_amount", "trip_duration",
-      "payment_type", "pickup_hour", "fare_per_mile")
-    val modelDir = s"$workDir/model"
-    val metrics = timed("train_eval_save") {
-      val (model, m) = FarePipeline.fitEval(trips, FareConfig(
-        labelCol = "fare_amount",
-        categoricalCol = "pickup_timeofday",
-        numericCols = numericCols,
-        numTrees = 100, maxDepth = 10))
-      model.write.overwrite().save(modelDir)
-      (m, rows)
-    }
+      // ---- leg 2: streaming decode → enrich → Derby append ----
+      System.setProperty("derby.stream.error.file", s"$workDir/derby.log")
+      val url = s"jdbc:derby:$workDir/tripsdb;create=true"
+      val schema = StructType(spark.read.parquet(fixtureDir).schema.fields.toSeq)
+      timed("stream_enrich_jdbc") {
+        val ms = MemoryStream[String]
+        val q = StreamPipeline.foreachBatchSink(
+          StreamPipeline.consumerTransform(ms.toDF(), schema),
+          s"$workDir/ckpt",
+          (batch, _) => graft.io.Sinks.jdbcAppend(
+            batch, url, "trips_enriched", "app", "app"))
+        jsonRows.grouped((jsonRows.length / 10).max(1)).foreach { chunk =>
+          ms.addData(chunk.toSeq: _*)
+          q.processAllAvailable()
+        }
+        q.stop()
+        // report what actually LANDED: foreachBatchSink catch-log-drops a
+        // failed batch (reference parity), so the requested row count
+        // would overstate the measured flow after any sink error
+        val landed = graft.io.Sources.jdbc(spark, url, "trips_enriched",
+          "app", "app").count()
+        ((), landed)
+      }
 
-    // ---- leg 5: batch serve of a CSV upload ----
-    val uploadCsv = s"$workDir/upload_csv"
-    trips.limit(20000).write.option("header", "true")
-      .mode("overwrite").csv(uploadCsv) // untimed: the user's upload file
-    timed("serve_batch") {
-      val n = Serve.serve(spark, modelDir, uploadCsv, s"$workDir/served")
-      ((), n)
-    }
+      // ---- leg 3: partitioned JDBC read-back ----
+      val trips = timed("jdbc_read") {
+        val df = graft.io.Sources.jdbc(spark, url, "trips_enriched",
+          "app", "app", partitionColumn = Some("pickup_hour"),
+          lowerBound = 0L, upperBound = 24L, numPartitions = 4)
+        (df, df.count())
+      }
 
-    // ---- leg 6: the EDA dashboard query set over the enriched store ----
-    timed("dashboard") {
-      val tod = trips.groupBy($"pickup_timeofday")
-        .agg(count(lit(1)).as("n"), avg($"fare_amount").as("avg_fare"))
-        .orderBy($"pickup_timeofday").collect()
-      val dayn = trips
-        .withColumn("day_name", TripFeatures.dayName($"tpep_pickup_datetime"))
-        .groupBy($"day_name").agg(count(lit(1)).as("n"))
-        .orderBy($"n".desc).collect()
-      val hourly = trips.groupBy($"pickup_hour")
-        .agg(avg($"fare_amount").as("avg_fare"), avg($"trip_distance").as("avg_dist"))
-        .orderBy($"pickup_hour").collect()
-      val routes = trips
-        .groupBy($"pulocationid", $"dolocationid")
-        .agg(count(lit(1)).as("n"))
-        .orderBy($"n".desc, $"pulocationid", $"dolocationid")
-        .limit(10).collect()
-      val pay = trips
-        .withColumn("payment", TripFeatures.paymentTypeName($"payment_type"))
-        .groupBy($"payment").agg(count(lit(1)).as("n"))
-        .orderBy($"n".desc).collect()
-      ((), (tod.length + dayn.length + hourly.length + routes.length + pay.length).toLong)
-    }
+      // ---- leg 4: train + eval + save at reference hyperparameters ----
+      val numericCols = Seq("vendorid", "ratecodeid", "pulocationid",
+        "dolocationid", "passenger_count", "trip_distance", "tip_amount",
+        "improvement_surcharge", "total_amount", "trip_duration",
+        "payment_type", "pickup_hour", "fare_per_mile")
+      val modelDir = s"$workDir/model"
+      val metrics = timed("train_eval_save") {
+        val (model, m) = FarePipeline.fitEval(trips, FareConfig(
+          labelCol = "fare_amount",
+          categoricalCol = "pickup_timeofday",
+          numericCols = numericCols,
+          numTrees = 100, maxDepth = 10))
+        model.write.overwrite().save(modelDir)
+        (m, rows)
+      }
 
-    def r4(x: Double) = math.rint(x * 10000) / 10000
-    val total = legs.map(_._2).sum
-    val legsJson = legs.map { case (n, s, c) =>
-      s""""$n":{"sec":${r4(s)},"rows":$c}""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"e2e_reference_flow","rows":$rows,"cpus":"${Session.cores}",
-         |"total_sec":${r4(total)},"legs":$legsJson,
-         |"ml_metrics":{"test_rmse":${r4(metrics.testRmse)},"test_mae":${r4(metrics.testMae)},
-         |"test_r2":${r4(metrics.testR2)}},
-         |"baseline":{"train_leg_sec":147.6,"rows":"~300k","source":"logs/sparkML.log:1-16",
-         |"note":"reference wall clock covers ONLY the training process; this artifact composes the five reference processes measured as six legs (produce, stream+sink, read-back, train, serve, dashboard - read-back is part of the reference ML process) at the same row scale"}}"""
-        .stripMargin.replace("\n", "")
-    Files.writeString(Paths.get(out), json + "\n")
-    println(json)
-    spark.stop()
+      // ---- leg 5: batch serve of a CSV upload ----
+      val uploadCsv = s"$workDir/upload_csv"
+      trips.limit(20000).write.option("header", "true")
+        .mode("overwrite").csv(uploadCsv) // untimed: the user's upload file
+      timed("serve_batch") {
+        val n = Serve.serve(spark, modelDir, uploadCsv, s"$workDir/served")
+        ((), n)
+      }
+
+      // ---- leg 6: the EDA dashboard query set over the enriched store ----
+      timed("dashboard") {
+        val tod = trips.groupBy($"pickup_timeofday")
+          .agg(count(lit(1)).as("n"), avg($"fare_amount").as("avg_fare"))
+          .orderBy($"pickup_timeofday").collect()
+        val dayn = trips
+          .withColumn("day_name", TripFeatures.dayName($"tpep_pickup_datetime"))
+          .groupBy($"day_name").agg(count(lit(1)).as("n"))
+          .orderBy($"n".desc).collect()
+        val hourly = trips.groupBy($"pickup_hour")
+          .agg(avg($"fare_amount").as("avg_fare"), avg($"trip_distance").as("avg_dist"))
+          .orderBy($"pickup_hour").collect()
+        val routes = trips
+          .groupBy($"pulocationid", $"dolocationid")
+          .agg(count(lit(1)).as("n"))
+          .orderBy($"n".desc, $"pulocationid", $"dolocationid")
+          .limit(10).collect()
+        val pay = trips
+          .withColumn("payment", TripFeatures.paymentTypeName($"payment_type"))
+          .groupBy($"payment").agg(count(lit(1)).as("n"))
+          .orderBy($"n".desc).collect()
+        ((), (tod.length + dayn.length + hourly.length + routes.length + pay.length).toLong)
+      }
+
+      def r4(x: Double) = math.rint(x * 10000) / 10000
+      val total = legs.map(_._2).sum
+      val legsJson = legs.map { case (n, s, c) =>
+        s""""$n":{"sec":${r4(s)},"rows":$c}""" }.mkString("{", ",", "}")
+      val json =
+        s"""{"metric":"e2e_reference_flow","rows":$rows,"cpus":"${Session.cores}",
+           |"total_sec":${r4(total)},"legs":$legsJson,
+           |"ml_metrics":{"test_rmse":${r4(metrics.testRmse)},"test_mae":${r4(metrics.testMae)},
+           |"test_r2":${r4(metrics.testR2)}},
+           |"baseline":{"train_leg_sec":147.6,"rows":"~300k","source":"logs/sparkML.log:1-16",
+           |"note":"reference wall clock covers ONLY the training process; this artifact composes the five reference processes measured as six legs (produce, stream+sink, read-back, train, serve, dashboard - read-back is part of the reference ML process) at the same row scale"}}"""
+          .stripMargin.replace("\n", "")
+      Files.writeString(Paths.get(out), json + "\n")
+      println(json)
+    } finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(workDir))
+    }
   }
 }

@@ -342,7 +342,7 @@ object ScaleStress {
     groupName.foreach(g => require(Groups.contains(g),
       s"unknown group '$g' (know: ${Groups.keys.mkString(", ")})"))
     val groupMode = groupName.isDefined
-    val src = "/root/testdata/sf0.1"
+    val src = Session.sfDir
     val spark = Session.local("graft-scalestress", cores = 32, conf = Map(
       // default 128MB splits would bin the ~8MB replica files into 2-3
       // scan tasks; 16MB mimics the per-task data share of a real cluster
@@ -463,7 +463,7 @@ object ScaleStress {
               "the density-proof claim is broken, not merely slow")
           Some(n)
         } else None
-      println(f"STRESS $name%-24s sf0.1 $small%6.2f s  x$factor $big%6.2f s  ratio $ratio%5.2f" +
+      println(f"STRESS $name%-24s ${new java.io.File(src).getName} $small%6.2f s  x$factor $big%6.2f s  ratio $ratio%5.2f" +
         rows.map(n => s"  rows_x$factor=$n").getOrElse(""))
       (name, small, big, ratio, rows)
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.GraftGlue
 
-import graft.operators.{Graph, Relational}
+import graft.operators.{Graph, Relational, Similarity}
 import graft.queries.TradeGraph
 
 /** The partition-keeping checkpoint and the one-job-per-round graph
@@ -20,13 +20,13 @@ class GraphRoundsSpec extends SparkSpec {
   private def plansExchange(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("Exchange")
 
-  test("localCheckpointPartitioned keeps hash partitioning under AQE; raw localCheckpoint drops it") {
+  test("materialize keeps hash partitioning under AQE; raw localCheckpoint drops it") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
     val df = spark.range(0, 400).select(($"id" % 37).as("k"), $"id".as("v"))
       .localCheckpoint()
     // the same-name re-alias is optimized away, so the final plan's
     // partitioning names the pre-alias attribute: it must be renamed
-    val kept = GraftGlue.localCheckpointPartitioned(
+    val kept = GraftGlue.materialize(
       Relational.spread(df.select($"k".as("k"), $"v".as("v")), $"k"))
     assert(partitioningOf(kept).isInstanceOf[HashPartitioning], partitioningOf(kept))
     val agg = kept.groupBy($"k").agg(sum($"v"))
@@ -42,13 +42,47 @@ class GraphRoundsSpec extends SparkSpec {
     assert(agg.collect().toSet == want)
   }
 
-  test("localCheckpointPartitioned leaves a coalesced frame's partitioning unknown") {
+  test("materialize leaves a coalesced frame's partitioning unknown") {
     val df = spark.range(0, 400).select(($"id" % 37).as("k"), $"id".as("v"))
-    val ck = GraftGlue.localCheckpointPartitioned(
+    val ck = GraftGlue.materialize(
       Relational.spread(df, $"k").coalesce(2))
     assert(partitioningOf(ck).isInstanceOf[UnknownPartitioning], partitioningOf(ck))
     assert(plansExchange(ck.groupBy($"k").agg(sum($"v"))))
     assert(ck.count() == 400)
+  }
+
+  test("materialize keeps exchange reuse across a self-join of one checkpoint") {
+    val df = spark.range(0, 400).select(($"id" % 37).as("k"), $"id".as("v"))
+    val ck = GraftGlue.materialize(Relational.spread(df, $"k"))
+    // both sides shuffle by g; the self-join renames one side's read of
+    // the checkpoint apart, and the second exchange must still be reused
+    val byG = ck.groupBy(($"v" % 7).as("g")).agg(count(lit(1)).as("n"))
+    val q = byG.as("x").join(byG.as("y"), "g")
+    assert(q.collect().length == 7)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("ReusedExchange"), plan)
+  }
+
+  test("materialize(eager = false) schedules no job") {
+    // no exchange in the frame: under AQE, planning a lazy checkpoint of
+    // a frame WITH one still runs its shuffle-map stages at call time
+    val df = spark.range(0, 400).select(($"id" % 37).as("k"), $"id".as("v"))
+    var ck: DataFrame = null
+    val jobs = jobsOf("GraphRoundsSpec") { ck = GraftGlue.materialize(df, eager = false) }
+    assert(jobs.isEmpty, s"a lazy checkpoint scheduled jobs:\n${jobs.mkString("\n")}")
+    assert(jobsOf("GraphRoundsSpec") { GraftGlue.materialize(df) }.nonEmpty,
+      "an eager checkpoint runs its frame")
+    // the first action materializes it
+    assert(ck.count() == 400)
+  }
+
+  test("kmeansAssign's final assignment plans no exchange on pid") {
+    // the points are spread by pid and checkpointed once: the per-point
+    // argmin of the final assignment must reuse that partitioning
+    val emb = Tables(spark, sf("sf0.001"), "embeddings")
+    val plan = Similarity.kmeansAssign(emb, "vec_id", "embedding", k = 8, iters = 3)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange hashpartitioning(pid"), plan)
   }
 
   test("PageRank, HITS and k-core schedule set-up jobs plus one job per round") {
