@@ -27,10 +27,10 @@ object Selection {
     *      over that histogram finds the cut score and the residual
     *      budget inside it (never a one-task global window, however
     *      large the score domain grows);
-    *   3. rows strictly above the cut pass with a broadcast filter (no
-    *      sort at all); only the cut bucket runs a per-row cumulative
-    *      window, partitioned by the score so it never sees more than
-    *      one bucket's rows.
+    *   3. the cut aggregate is one row, collected once; rows strictly
+    *      above the cut pass a literal filter (no sort at all), and only
+    *      the cut bucket runs a per-row cumulative window, partitioned by
+    *      the score so it never sees more than one bucket's rows.
     *
     * The greedy rule is deterministic (score DESC, id ASC), so the
     * selected SET is unique and engine-reproducible. If the whole corpus
@@ -56,20 +56,26 @@ object Selection {
         "__negs", Seq("__tok"), inclusive = true)
       .withColumn("__cum", col("__tok_cum"))
     val crossing = col("__cum") - col("__tok") < budget && col("__cum") >= budget
+    // one row; collected once so the histogram and prefix sum run once,
+    // not once per union branch
     val cut = cum.agg(
       max(when(crossing, col("__s"))).as("__cut_s"),
       max(when(crossing, lit(budget) - (col("__cum") - col("__tok"))))
-        .as("__cut_budget"))
-    // 3. pass-through above the cut; per-row window inside the cut bucket
-    val withCut = scored.crossJoin(broadcast(cut))
-    val above = withCut.filter(col("__cut_s").isNull || col("__s") > col("__cut_s"))
-    val atCut = withCut.filter(col("__s") === col("__cut_s"))
-      .withColumn("__dcum", sum(col("__w")).over(
-        Window.partitionBy(col("__s")).orderBy(id.asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("__dcum") - col("__w") < col("__cut_budget"))
-      .drop("__dcum")
-    above.union(atCut).drop("__s", "__w", "__cut_s", "__cut_budget")
+        .as("__cut_budget")).head()
+    // 3. pass-through above the cut; per-row window inside the cut bucket.
+    // A null cut (the corpus weighs less than the budget) keeps every row.
+    if (cut.isNullAt(0)) scored.drop("__s", "__w")
+    else {
+      val cutS = lit(cut.get(0)).cast(scored.schema("__s").dataType)
+      val above = scored.filter(col("__s") > cutS)
+      val atCut = scored.filter(col("__s") === cutS)
+        .withColumn("__dcum", sum(col("__w")).over(
+          Window.partitionBy(col("__s")).orderBy(id.asc)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .filter(col("__dcum") - col("__w") < cut.getLong(1))
+        .drop("__dcum")
+      above.union(atCut).drop("__s", "__w")
+    }
   }
 
   /** Weight-proportional systematic sample of `m` rows: lay every row's

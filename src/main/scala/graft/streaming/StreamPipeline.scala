@@ -63,9 +63,18 @@ object StreamPipeline {
     * injected so JDBC/parquet targets share the loop. The batch is
     * neither counted nor cached here: a writer that reads its batch once
     * computes it inside its own write job, and a writer that reads it
-    * twice persists it itself. */
+    * twice persists it itself.
+    *
+    * Unless the caller already chose one, the session's checkpoint file
+    * manager is set to [[LocalCheckpointFileManager]], which writes the
+    * per-batch offset and commit logs on a local disk with java.nio. It
+    * is set here because this is the engine's only streaming start, and
+    * the sessions that reach it are built by callers of all kinds. */
   def foreachBatchSink(df: DataFrame, checkpointDir: String,
-                       writer: (DataFrame, Long) => Unit): StreamingQuery =
+                       writer: (DataFrame, Long) => Unit): StreamingQuery = {
+    val conf = df.sparkSession.conf
+    if (conf.getOption(CheckpointManagerKey).isEmpty)
+      conf.set(CheckpointManagerKey, classOf[LocalCheckpointFileManager].getName)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -78,6 +87,10 @@ object StreamPipeline {
         }
       }
       .start()
+  }
+
+  /** Spark's session key naming the checkpoint file manager class. */
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Parquet-append batch writer (the JDBC-append analog testable without
     * a database; swap for Sinks.jdbcAppend in production). */

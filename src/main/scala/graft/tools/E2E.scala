@@ -24,7 +24,9 @@ import graft.streaming.StreamPipeline
   *      permissive decode → strict ISO parse → 9-column enrichment →
   *      3VL passenger filter (sparkConsumer.py:59-97 as ONE codegen'd
   *      chain) → foreachBatch JDBC append into embedded Derby
-  *      (sparkConsumer.py:103-163; the q176 machinery), 10 micro-batches.
+  *      (sparkConsumer.py:103-163; the q176 machinery), 10 micro-batches;
+  *      `stream_batch_ms` reports the median milliseconds per batch of
+  *      each progress phase (write-ahead log, commit, planning, sink).
   *   3. jdbc_read — 4-way partitioned JDBC read-back of the enriched
   *      table (sparkML.py:40-44's Postgres read, partitioned where the
   *      reference's was single-threaded).
@@ -45,6 +47,11 @@ import graft.streaming.StreamPipeline
   * values are fixture-specific — wall-clock is the artifact, as in
   * `MLBENCH.json`. */
 object E2E {
+  /** The `StreamingQueryProgress.durationMs` phases E2E reports, as the
+    * median per micro-batch of the stream leg. */
+  private val StreamPhases =
+    Seq("walCommit", "commitOffsets", "queryPlanning", "addBatch", "triggerExecution")
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("E2E.json")
     val rows = sys.env.getOrElse("GRAFT_E2E_ROWS", "300000").toLong
@@ -109,7 +116,7 @@ object E2E {
       System.setProperty("derby.stream.error.file", s"$workDir/derby.log")
       val url = s"jdbc:derby:$workDir/tripsdb;create=true"
       val schema = StructType(spark.read.parquet(fixtureDir).schema.fields.toSeq)
-      timed("stream_enrich_jdbc") {
+      val batchMs = timed("stream_enrich_jdbc") {
         val ms = MemoryStream[String]
         val q = StreamPipeline.foreachBatchSink(
           StreamPipeline.consumerTransform(ms.toDF(), schema),
@@ -120,13 +127,19 @@ object E2E {
           ms.addData(chunk.toSeq: _*)
           q.processAllAvailable()
         }
+        // median time per phase over the micro-batches that ran a batch
+        val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
         q.stop()
+        val medians = StreamPhases.map { k =>
+          val v = ran.map(_.durationMs.get(k).longValue).sorted
+          k -> (if (v.isEmpty) 0.0 else (v((v.length - 1) / 2) + v(v.length / 2)) / 2.0)
+        }
         // report what actually LANDED: foreachBatchSink catch-log-drops a
         // failed batch (reference parity), so the requested row count
         // would overstate the measured flow after any sink error
         val landed = graft.io.Sources.jdbc(spark, url, "trips_enriched",
           "app", "app").count()
-        ((), landed)
+        (medians, landed)
       }
 
       // ---- leg 3: partitioned JDBC read-back ----
@@ -190,9 +203,11 @@ object E2E {
       val total = legs.map(_._2).sum
       val legsJson = legs.map { case (n, s, c) =>
         s""""$n":{"sec":${r4(s)},"rows":$c}""" }.mkString("{", ",", "}")
+      val batchJson = batchMs.map { case (k, ms) => s""""$k":$ms""" }.mkString("{", ",", "}")
       val json =
         s"""{"metric":"e2e_reference_flow","rows":$rows,"cpus":"${Session.cores}",
            |"total_sec":${r4(total)},"legs":$legsJson,
+           |"stream_batch_ms":$batchJson,
            |"ml_metrics":{"test_rmse":${r4(metrics.testRmse)},"test_mae":${r4(metrics.testMae)},
            |"test_r2":${r4(metrics.testR2)}},
            |"baseline":{"train_leg_sec":147.6,"rows":"~300k","source":"logs/sparkML.log:1-16",

@@ -11,9 +11,10 @@ import graft.{Session, SparkEntry}
   * guide §1 "measure first"): one warm pass (absorbs codegen/JIT), then
   * a profiled pass per query with a listener recording every stage's
   * wall span, task count and summed executor task time. Output per
-  * query: total wall, job count, and the stages sorted by wall span —
-  * the direct read for "single-task stage" (numTasks=1 where cores=32)
-  * and "job-count bound" (many jobs, each stage cheap) diagnoses.
+  * query: total wall, job, stage and shuffle-map stage counts, and the
+  * stages sorted by wall span — the direct read for "single-task stage"
+  * (numTasks=1 where cores=32) and "job-count bound" (many jobs, each
+  * stage cheap) diagnoses.
   * `sbt "runMain graft.tools.Profile <q>..."`. Dev tool only: never in
   * a query path, never in the bench methodology. */
 object Profile {
@@ -22,7 +23,7 @@ object Profile {
     val spark = Session.local("graft-profile")
 
     case class St(id: Int, name: String, tasks: Int, wallMs: Long,
-                  taskMs: Long, site: String)
+                  taskMs: Long, site: String, shuffleMap: Boolean)
     val stages = ArrayBuffer[St]()
     var jobs = 0
     val listener = new SparkListener {
@@ -33,7 +34,8 @@ object Profile {
         stages.synchronized {
           stages += St(si.stageId, si.name.takeWhile(_ != '\n'), si.numTasks,
             wall, si.taskMetrics.executorRunTime,
-            si.details.linesIterator.toSeq.headOption.getOrElse(""))
+            si.details.linesIterator.toSeq.headOption.getOrElse(""),
+            GraftGlue.isShuffleMap(si))
         }
       }
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -58,7 +60,8 @@ object Profile {
       GraftGlue.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       val snap = stages.synchronized { (stages.toSeq, jobs) }
-      println(f"== $name wall=$wall%.3f s  jobs=${snap._2}  stages=${snap._1.size}")
+      println(f"== $name wall=$wall%.3f s  jobs=${snap._2}  stages=${snap._1.size}" +
+        s"  shuffle-map=${snap._1.count(_.shuffleMap)}")
       val span = snap._1.map(_.wallMs).sum
       snap._1.sortBy(-_.wallMs).take(14).foreach { s =>
         println(f"   ${s.wallMs}%6d ms wall  ${s.taskMs}%7d ms task  " +

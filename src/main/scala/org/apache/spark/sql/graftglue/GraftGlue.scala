@@ -2,6 +2,7 @@ package org.apache.spark.sql.graftglue
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Expression, SortOrder}
@@ -27,6 +28,10 @@ object GraftGlue {
     * posted asynchronously, so a counting listener is read only after a
     * drain. `listenerBus` is private[spark], hence this package. */
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** Whether a stage writes shuffle output (a shuffle-map stage) rather
+    * than a job's result. `shuffleDepId` is private[spark]. */
+  def isShuffleMap(si: StageInfo): Boolean = si.shuffleDepId.isDefined
 
   /** Frees the block-manager storage behind a `localCheckpoint()`ed
     * Dataset. `Dataset.unpersist` only consults the cache manager,
