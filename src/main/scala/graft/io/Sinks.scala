@@ -8,15 +8,6 @@ import graft.functions.TripFeatures
 /** Sink factories (SURVEY.md §2.1 K1-K5). */
 object Sinks {
 
-  def parquet(df: DataFrame, path: String,
-              mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).parquet(path)
-
-  /** K4 — CSV with header. */
-  def csv(df: DataFrame, path: String,
-          mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).option("header", "true").csv(path)
-
   /** K1 — the producer's row-at-a-time JSON serialization
     * (kafkaProducer.py:12-16,36-38) as a single distributed expression:
     * every column into a JSON object, timestamps rendered ISO-8601 the

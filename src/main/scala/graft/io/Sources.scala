@@ -9,11 +9,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  /** S1 — parquet scan; splits by row-group, so parallelism scales with
-    * file count/size, not a single reader like the reference's pandas. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S5/S6 — CSV with explicit schema (schema-on-read discipline; the
     * reference inferred on upload, main.py:65-67). */
   def csv(spark: SparkSession, path: String, schema: StructType,

@@ -289,15 +289,8 @@ object Dedup {
     * Aggregation states stay k fixed-width longs (HashAggregate fast
     * path, map-side combinable). The DuckDB oracle mirrors the exact
     * arithmetic with the same embedded (a_j, b_j) literals. */
-  def minhashSignaturesLcg(toks: DataFrame, id: String, k: Int): DataFrame = {
-    val withH = toks.select(col(id),
-      pmod(TextFunctions.md5Head60(col("sh")), lit(LcgPrime)).as("h"))
-    val mins = (0 until k).map { j =>
-      val (a, b) = lcgCoef(j)
-      min(pmod(lit(a) * col("h") + lit(b), lit(LcgPrime))).as(s"mh$j")
-    }
-    withH.groupBy(col(id)).agg(mins.head, mins.tail: _*)
-  }
+  def minhashSignaturesLcg(toks: DataFrame, id: String, k: Int): DataFrame =
+    lcgSignatures(toks, id, k, TextFunctions.md5Head60(col("sh")))
 
   /** MinHash signatures on a NATIVE 64-bit hash base: the token integer
     * comes from one codegen'd `xxhash64` call instead of an md5 digest +
@@ -308,9 +301,14 @@ object Dedup {
     * bench pair carries the measured delta). Same 2-universal LCG family
     * and prime as [[minhashSignaturesLcg]] — only the base hash changes,
     * so the estimator's statistical structure is identical. */
-  def minhashSignaturesXx(toks: DataFrame, id: String, k: Int): DataFrame = {
-    val withH = toks.select(col(id),
-      pmod(xxhash64(col("sh")), lit(LcgPrime)).as("h"))
+  def minhashSignaturesXx(toks: DataFrame, id: String, k: Int): DataFrame =
+    lcgSignatures(toks, id, k, xxhash64(col("sh")))
+
+  /** The LCG slot family over a per-token base hash: the base is reduced
+    * mod [[LcgPrime]] and slot j keeps min((a_j·h + b_j) mod P). */
+  private def lcgSignatures(toks: DataFrame, id: String, k: Int,
+                            base: Column): DataFrame = {
+    val withH = toks.select(col(id), pmod(base, lit(LcgPrime)).as("h"))
     val mins = (0 until k).map { j =>
       val (a, b) = lcgCoef(j)
       min(pmod(lit(a) * col("h") + lit(b), lit(LcgPrime))).as(s"mh$j")
@@ -873,13 +871,6 @@ object Dedup {
   private def hexDigit(h: Column, pos: Int): Column =
     conv(substring(h, pos, 1), 16, 10).cast("int")
 
-  /** Portable 64-bit SimHash as four 16-bit chunks (c0..c3, low chunk
-    * first): per bit, sum +1/−1 over the doc's distinct tokens weighted by
-    * the bit of the token's md5, take the sign. Bit b lives in hex digit
-    * b/4 (first 16 hex chars = 64 bits), sub-bit b%4. Expressed as 64
-    * running sums in one hash aggregate (map-side combinable); chunked
-    * ints keep every value inside portable INT32 range so the DuckDB
-    * oracle reproduces the sketch bit-for-bit. */
   /** Shared SimHash tail: per-bit ±1 sums in one hash aggregate, then the
     * sign bits packed into four 16-bit chunks. `bit(b)` supplies bit b of
     * the current row's token hash (whatever the hash family). */
@@ -897,6 +888,13 @@ object Dedup {
       }: _*)
   }
 
+  /** Portable 64-bit SimHash as four 16-bit chunks (c0..c3, low chunk
+    * first): per bit, sum +1/−1 over the doc's distinct tokens weighted by
+    * the bit of the token's md5, take the sign. Bit b lives in hex digit
+    * b/4 (first 16 hex chars = 64 bits), sub-bit b%4. Expressed as 64
+    * running sums in one hash aggregate (map-side combinable); chunked
+    * ints keep every value inside portable INT32 range so the DuckDB
+    * oracle reproduces the sketch bit-for-bit. */
   def simhashChunks(df: DataFrame, id: String, text: String): DataFrame = {
     // Same pre-hash repartition rationale as minhashNearDups: parallelize
     // the per-token digest/bit-decode work and pre-align with the groupBy.
@@ -939,7 +937,8 @@ object Dedup {
     * Every stage is a hash join/aggregate on (chunk_idx, chunk_value) —
     * shuffle-bounded, no n² anywhere; bucket skew (low-entropy corpora
     * concentrate chunk values) is the LSH stop-bucket story again and
-    * AQE's skew split covers the join. The sketch table is
+    * AQE's skew split covers the join. No stop-bucket cap: every
+    * agreeing chunk yields its candidates. The sketch table is
     * checkpointed: three consumers would otherwise recompute the
     * full token-hash aggregate. */
   def simhashBandedPairs(df: DataFrame, id: String, text: String,
@@ -950,26 +949,7 @@ object Dedup {
     val sketch =
       if (scheme == "xx64") simhashChunksXx(df, id, text)
       else simhashChunks(df, id, text)
-    val sk = GraftGlue.materialize(sketch)
-    val bands = sk.select(col(id),
-      posexplode(array(col("c0"), col("c1"), col("c2"), col("c3")))
-        .as(Seq("bi", "bv")))
-    val cand = bands.alias("a")
-      .join(bands.alias("b"),
-        col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
-          col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
-      .distinct()
-    cand
-      .join(sk.select(col(id).as("id_a"), col("c0").as("a0"), col("c1").as("a1"),
-        col("c2").as("a2"), col("c3").as("a3")), "id_a")
-      .join(sk.select(col(id).as("id_b"), col("c0").as("b0"), col("c1").as("b1"),
-        col("c2").as("b2"), col("c3").as("b3")), "id_b")
-      .withColumn("dist", hammingChunks(
-        Seq(col("a0"), col("a1"), col("a2"), col("a3")),
-        Seq(col("b0"), col("b1"), col("b2"), col("b3"))))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist").cast("int").as("dist"))
+    bandedHammingPairs(sketch, id, 4, hammingBandExprs(4), maxDist, None)
   }
 
   /** The ONE band derivation over the chunked c0..c3 sketch shape,
@@ -1024,30 +1004,8 @@ object Dedup {
     // silently reports zero recall — refuse loudly like the bounds above
     require(maxBucket >= 2,
       s"maxBucket=$maxBucket: a cap below 2 drops every bucket and returns zero pairs")
-    val sk = sketch.select(col(id), col("c0"), col("c1"), col("c2"), col("c3"))
-      .transform(GraftGlue.materialize(_))
-    val bands = sk.select(col(id),
-      posexplode(array(hammingBandExprs(nBands): _*)).as(Seq("bi", "bv")))
-    val keep = bands.groupBy(col("bi"), col("bv"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n").between(2, maxBucket))
-    val inBuckets = bands.join(keep, Seq("bi", "bv"))
-    val cand = inBuckets.alias("a")
-      .join(inBuckets.alias("b"),
-        col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
-          col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
-      .distinct()
-    cand
-      .join(sk.select(col(id).as("id_a"), col("c0").as("a0"), col("c1").as("a1"),
-        col("c2").as("a2"), col("c3").as("a3")), "id_a")
-      .join(sk.select(col(id).as("id_b"), col("c0").as("b0"), col("c1").as("b1"),
-        col("c2").as("b2"), col("c3").as("b3")), "id_b")
-      .withColumn("dist", hammingChunks(
-        Seq(col("a0"), col("a1"), col("a2"), col("a3")),
-        Seq(col("b0"), col("b1"), col("b2"), col("b3"))))
-      .filter(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist").cast("int").as("dist"))
+    bandedHammingPairs(sketch, id, 4, hammingBandExprs(nBands), maxDist,
+      Some(maxBucket))
   }
 
   /** [[hammingBandedPairs]] generalized to a sketch of ANY chunk count
@@ -1085,32 +1043,50 @@ object Dedup {
     require(maxBucket >= 2,
       s"maxBucket=$maxBucket: a cap below 2 drops every bucket and returns zero pairs")
     val chunkNames = (0 until nChunks).map(k => s"c$k")
-    // null chunks refuse loudly at the shared projection (see
-    // nonNullChunk) — both the band stream and the verify read sk
-    val sk = sketch.select((col(id) +: chunkNames.map(c =>
-      nonNullChunk(col(id), c).as(c))): _*).transform(GraftGlue.materialize(_))
+    // null chunks refuse loudly at the checkpointed projection (see
+    // nonNullChunk) — both the band stream and the verify read it
+    val checked = sketch.select((col(id) +: chunkNames.map(c =>
+      nonNullChunk(col(id), c).as(c))): _*)
     val bandExprs: Seq[Column] =
       if (chunksPerBand == 1) chunkNames.map(col)
       else (0 until nBands).map(b => concat_ws(":",
         chunkNames.slice(b * chunksPerBand, (b + 1) * chunksPerBand)
           .map(c => col(c).cast("string")): _*))
+    bandedHammingPairs(checked, id, nChunks, bandExprs.map(_.cast("string")),
+      maxDist, Some(maxBucket))
+  }
+
+  /** The banded-Hamming pair plan every chunked-sketch engine above
+    * runs: checkpoint the sketch's (id, c0..c{nChunks-1}) projection
+    * once (the band stream and both verify sides read it), explode
+    * `bandExprs` into (bi, bv) buckets, keep only buckets of 2 to
+    * `maxBucket` members when a stop-bucket cap is given, self-join the
+    * buckets into distinct candidate pairs (id_a < id_b), and keep the
+    * pairs within `maxDist` by the exact chunked Hamming distance.
+    * Returns (id_a, id_b, dist). */
+  private def bandedHammingPairs(sketch: DataFrame, id: String, nChunks: Int,
+                                 bandExprs: Seq[Column], maxDist: Int,
+                                 maxBucket: Option[Int]): DataFrame = {
+    val chunkNames = (0 until nChunks).map(k => s"c$k")
+    val sk = sketch.select(col(id) +: chunkNames.map(col): _*)
+      .transform(GraftGlue.materialize(_))
     val bands = sk.select(col(id),
-      posexplode(array(bandExprs.map(_.cast("string")): _*)).as(Seq("bi", "bv")))
-    val keep = bands.groupBy(col("bi"), col("bv"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .filter(col("bucket_n").between(2, maxBucket))
-    val inBuckets = bands.join(keep, Seq("bi", "bv"))
+      posexplode(array(bandExprs: _*)).as(Seq("bi", "bv")))
+    val inBuckets = maxBucket.fold(bands) { cap =>
+      val keep = bands.groupBy(col("bi"), col("bv"))
+        .agg(count(lit(1)).as("bucket_n"))
+        .filter(col("bucket_n").between(2, cap))
+      bands.join(keep, Seq("bi", "bv"))
+    }
     val cand = inBuckets.alias("a")
       .join(inBuckets.alias("b"),
         col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&
           col(s"a.$id") < col(s"b.$id"))
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"))
       .distinct()
-    cand
-      .join(sk.select((col(id).as("id_a") +:
-        chunkNames.map(c => col(c).as(s"a_$c"))): _*), "id_a")
-      .join(sk.select((col(id).as("id_b") +:
-        chunkNames.map(c => col(c).as(s"b_$c"))): _*), "id_b")
+    def side(p: String): DataFrame = sk.select(
+      col(id).as(s"id_$p") +: chunkNames.map(c => col(c).as(s"${p}_$c")): _*)
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
       .withColumn("dist", hammingChunks(
         chunkNames.map(c => col(s"a_$c")), chunkNames.map(c => col(s"b_$c"))))
       .filter(col("dist") <= maxDist)

@@ -70,7 +70,20 @@ object Relational {
       .orderBy(col("cnt").desc +: keys.map(_.asc): _*)
       .limit(k)
 
-  /** Exact linear-interpolated quantiles of a decimal-quantized column
+  /** Exact linear-interpolated quantiles of one decimal-quantized
+    * column: [[exactQuantilesQuantizedMulti]] over `Seq(c)`, its
+    * `c_p<i>` columns renamed. Returns one row with columns
+    * p0..p{qs.size-1}. */
+  def exactQuantilesQuantized(df: DataFrame, c: String, qs: Seq[Double],
+                              scale: Int = 100, minBucketWidth: Long = 1024L,
+                              maxCoarseBuckets: Long = 1L << 16,
+                              strict: Boolean = false,
+                              domainBounded: Boolean = false): DataFrame =
+    exactQuantilesQuantizedMulti(df, Seq(c), qs, scale, minBucketWidth,
+        maxCoarseBuckets, strict, domainBounded)
+      .toDF(qs.indices.map(i => s"p$i"): _*)
+
+  /** Exact linear-interpolated quantiles of decimal-quantized columns
     * (money: 2 decimals → scale=100) via two-level rank selection, NOT a
     * buffer-all Percentile aggregate. Quantization is lossless for
     * s-decimal data (round(x·s) / s round-trips the double exactly for
@@ -79,13 +92,13 @@ object Relational {
     * aggregate or a window over a bounded histogram, never a per-
     * partition buffer of the data:
     *
-    *   0. range pass — (min, max) of the quantized values picks the
-    *      bucket width W adaptively: W = max(minBucketWidth,
+    *   0. range pass — per column, (min, max) of the quantized values
+    *      picks the bucket width W adaptively: W = max(minBucketWidth,
     *      ceil(range / maxCoarseBuckets)), so the coarse histogram —
-    *      and the single-partition cumulative window over it — never
-    *      exceeds maxCoarseBuckets rows no matter how wide the column's
-    *      value range is (a fixed W would single-thread and spill on a
-    *      wide-range column);
+    *      and the cumulative window over it — never exceeds
+    *      maxCoarseBuckets rows per column no matter how wide the
+    *      column's value range is (a fixed W would single-thread and
+    *      spill on a wide-range column);
     *   1. coarse pass — groupBy floor(cents/W): ≤ maxCoarseBuckets
     *      buckets whatever the row count; a cumulative window over those
     *      buckets locates the bucket holding each target rank;
@@ -94,166 +107,38 @@ object Relational {
     *      it up: an all-ties column compresses to one row), then the
     *      bracketing values are picked by rank and interpolated.
     *
-    * Quantization exactness: results equal percentile/quantile_cont only
-    * when every value round-trips `round(x·scale)/scale == x` (true for
-    * `scale`-decimal data). With `strict = true` the range pass also
-    * measures the max round-trip error and the query FAILS (assert_true)
-    * if any value would lose precision — callers that cannot tolerate
-    * silent quantization opt in instead of silently getting 1/scale-
-    * rounded quantiles.
-    *
-    * Returns one row with columns p0..p{qs.size-1}. */
-  /** @param domainBounded caller's promise that the column's VALUE DOMAIN
-    *   is structurally bounded (money cents, counts, day offsets — not
-    *   arbitrary 64-bit data): the engine then folds its three corpus
-    *   passes into ONE per-value histogram pass (r18, guide §1.2 "remove
-    *   unnecessary passes") and runs the range/coarse/refine stages over
-    *   the domain-bounded distinct-value table instead of re-scanning the
-    *   data. Identical results and identical bucket geometry (same W
-    *   formula); only the pass structure changes. Do NOT set it for
-    *   columns whose distinct-value count tracks the DATA (free-form
-    *   doubles, ids) — the histogram would be row-scaled. */
-  def exactQuantilesQuantized(df: DataFrame, c: String, qs: Seq[Double],
-                              scale: Int = 100, minBucketWidth: Long = 1024L,
-                              maxCoarseBuckets: Long = 1L << 16,
-                              strict: Boolean = false,
-                              domainBounded: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def centsOf(x: Column): Column = round(x * scale).cast("long")
-    def bucketOf(cents: Column): Column = // floor-division, negative-safe
-      floor(cents.cast("double") / col("__W")).cast("long")
-
-    // Level 0: value range → adaptive bucket width (one-row broadcast).
-    val rows = {
-      val base = df.filter(col(c).isNotNull)
-      if (strict) // the round-trip error column exists only when checked
-        base.select(centsOf(col(c)).as("__cents"),
-          abs(col(c) - centsOf(col(c)).cast("double") / scale).as("__err"))
-      else base.select(centsOf(col(c)).as("__cents"))
-    }
-    // domainBounded: the ONE corpus pass — per-value counts (plus the
-    // per-value max round-trip error when strict, whose max-of-maxes is
-    // the global max the strict gate needs)
-    val hist = if (!domainBounded) None else Some {
-      val aggs = Seq(sum(lit(1L)).as("__hcnt")) ++
-        (if (strict) Seq(max(col("__err")).as("__err")) else Nil)
-      rows.groupBy(col("__cents")).agg(aggs.head, aggs.tail: _*)
-        .transform(GraftGlue.materialize(_))
-    }
-    val wBase = greatest(lit(minBucketWidth),
-      ceil((col("__cmax") - col("__cmin") + 1).cast("double") / maxCoarseBuckets).cast("long"))
-    // strict: assert_true is folded INTO the width expression (adding a
-    // coalesced null) so column pruning cannot drop the check
-    val wExpr =
-      if (strict)
-        wBase + coalesce(assert_true(col("__qerr") <= 0.0,
-          concat(lit(s"exactQuantilesQuantized($c, scale=$scale): values are not " +
-            s"$scale-quantized; max round-trip error "),
-          col("__qerr").cast("string"))).cast("long"), lit(0L))
-      else wBase
-    val statsAggs = Seq(max(col("__cents")).as("__cmax")) ++
-      (if (strict) Seq(max(col("__err")).as("__qerr")) else Nil)
-    val statsW = hist.getOrElse(rows)
-      .agg(min(col("__cents")).as("__cmin"), statsAggs: _*)
-      .select(wExpr.as("__W"))
-
-    // Level 1: coarse bucket histogram. Map-side combine collapses the
-    // scan to ≤ maxCoarseBuckets rows regardless of row count; the
-    // ordered cumulative window runs over that bounded histogram only.
-    // (domainBounded: summed from the value histogram — no data re-scan)
-    val coarse = hist match {
-      case Some(h) => h.select(col("__cents"), col("__hcnt"))
-        .crossJoin(broadcast(statsW))
-        .groupBy(bucketOf(col("__cents")).as("b"), col("__W"))
-        .agg(sum(col("__hcnt")).as("cnt"))
-      case None => rows.select(col("__cents"))
-        .crossJoin(broadcast(statsW))
-        .groupBy(bucketOf(col("__cents")).as("b"), col("__W"))
-        .agg(count(lit(1)).as("cnt"))
-    }
-    val wb = Window.orderBy(col("b"))
-    val cumc = coarse.select(
-      col("b"), col("cnt"), col("__W"),
-      sum(col("cnt")).over(wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
-      sum(col("cnt")).over(wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("n"))
-    def k(q: Double): Column = (col("n") - 1) * lit(q)
-    // For each quantile, the bucket holding global rank r (1-based) and
-    // the count of rows strictly before that bucket. cum and cum-cnt are
-    // both increasing in b, so min-over-eligible picks the first bucket.
-    val targetAggs = qs.zipWithIndex.flatMap { case (q, i) =>
-      val r0 = floor(k(q)) + 1
-      val r1 = ceil(k(q)) + 1
-      Seq(min(when(col("cum") >= r0, col("b"))).as(s"b0_$i"),
-          min(when(col("cum") >= r0, col("cum") - col("cnt"))).as(s"below0_$i"),
-          min(when(col("cum") >= r1, col("b"))).as(s"b1_$i"),
-          min(when(col("cum") >= r1, col("cum") - col("cnt"))).as(s"below1_$i"))
-    }
-    val targets = cumc.agg(max(col("n")).as("n"),
-      min(col("__W")).as("__W") +: targetAggs: _*)
-
-    // Level 2: refine only inside the (≤ 2·|qs|) target buckets. The
-    // per-bucket distinct-value histogram is bounded by W rows, so the
-    // partitioned cumulative window and final pick are O(|qs|·W) however
-    // skewed the data is (an all-ties column compresses to one row).
-    // (domainBounded: the value histogram IS the per-value refine table —
-    // filter it to the target buckets, no third data pass)
-    val isTarget = qs.indices
-      .map(i => bucketOf(col("v")) === col(s"b0_$i") || bucketOf(col("v")) === col(s"b1_$i"))
-      .reduce(_ || _)
-    val fine0 = hist match {
-      case Some(h) => h
-        .select(col("__cents").as("v"), col("__hcnt").as("cnt"))
-        .crossJoin(broadcast(targets))
-        .filter(isTarget)
-      case None => rows.select(col("__cents").as("v"))
-        .crossJoin(broadcast(targets))
-        .filter(isTarget)
-        .groupBy(col("v") +: col("n") +: col("__W") +: qs.indices.flatMap(i =>
-          Seq(col(s"b0_$i"), col(s"below0_$i"), col(s"b1_$i"), col(s"below1_$i"))): _*)
-        .agg(count(lit(1)).as("cnt"))
-    }
-    val fine = fine0
-      .withColumn("fcum", sum(col("cnt")).over(
-        Window.partitionBy(bucketOf(col("v"))).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val pickAggs = qs.zipWithIndex.flatMap { case (q, i) =>
-      val r0 = floor(k(q)) + 1
-      val r1 = ceil(k(q)) + 1
-      Seq(
-        min(when(bucketOf(col("v")) === col(s"b0_$i") &&
-          col(s"below0_$i") + col("fcum") >= r0, col("v"))).as(s"v0_$i"),
-        min(when(bucketOf(col("v")) === col(s"b1_$i") &&
-          col(s"below1_$i") + col("fcum") >= r1, col("v"))).as(s"v1_$i"))
-    }
-    val picked = fine.agg(max(col("n")).as("n"), pickAggs: _*)
-    picked.select(qs.zipWithIndex.map { case (q, i) =>
-      val frac = k(q) - floor(k(q))
-      val v0 = col(s"v0_$i").cast("double") / scale.toDouble
-      val v1 = col(s"v1_$i").cast("double") / scale.toDouble
-      (v0 + frac * (v1 - v0)).as(s"p$i")
-    }: _*)
-  }
-
-  /** MULTI-COLUMN twin of [[exactQuantilesQuantized]]: the same
-    * adaptive-width two-level histogram, run for SEVERAL columns in the
-    * SAME three passes — the repeat-derivation fix for the RFM shape
-    * (q226: three per-metric quantile builds = nine corpus passes where
-    * three suffice; round-17 verdict directive). The metric id `__m`
+    * All columns run in the SAME three passes (q226's RFM shape: three
+    * per-metric builds would be nine corpus passes). The metric id `__m`
     * rides every stage: the value stream is one posexplode over the
-    * column array (ONE scan of `df`), bucket widths / coarse histograms
-    * / target buckets / refine picks all key or partition by `__m`, so
-    * every window stays per-metric (never a one-task global frame) and
-    * the pass count is independent of the column count. Returns ONE row
-    * with columns `<col>_p<i>` — broadcastable exactly like the
-    * single-column form's output; each column's values equal
-    * `exactQuantilesQuantized(df, col, qs, ...)` by construction
-    * (RelationalSpec pins the equality per column). Quantization
-    * contract as the single-column form: exact for `scale`-decimal
-    * data. */
+    * column array (ONE scan of `df`), bucket widths, coarse histograms
+    * and target buckets key or partition by `__m`, so every window stays
+    * per-metric, and one global aggregate over the refine rows picks
+    * every column's bracketing values. The pass count is independent of
+    * the column count; nulls drop per column. Returns ONE row with
+    * columns `<col>_p<i>` — broadcastable.
+    *
+    * @param strict results equal percentile/quantile_cont only when
+    *   every value round-trips `round(x·scale)/scale == x`. With
+    *   `strict = true` the range pass also measures each column's max
+    *   round-trip error and the query FAILS (assert_true, naming the
+    *   column) if any value would lose precision — callers that cannot
+    *   tolerate silent quantization opt in instead of silently getting
+    *   1/scale-rounded quantiles.
+    * @param domainBounded caller's promise that every column's VALUE
+    *   DOMAIN is structurally bounded (money cents, counts, day offsets —
+    *   not arbitrary 64-bit data): the engine then folds its three
+    *   corpus passes into ONE per-(column, value) histogram pass (r18,
+    *   guide §1.2 "remove unnecessary passes") and runs the range,
+    *   coarse and refine stages over that distinct-value table instead
+    *   of re-scanning the data. Identical results and identical bucket
+    *   geometry (same W formula); only the pass structure changes. Do
+    *   NOT set it for columns whose distinct-value count tracks the DATA
+    *   (free-form doubles, ids) — the histogram would be row-scaled. */
   def exactQuantilesQuantizedMulti(df: DataFrame, cs: Seq[String],
                                    qs: Seq[Double], scale: Int = 100,
                                    minBucketWidth: Long = 1024L,
                                    maxCoarseBuckets: Long = 1L << 16,
+                                   strict: Boolean = false,
                                    domainBounded: Boolean = false)
       : DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -261,24 +146,46 @@ object Relational {
     def centsOf(x: Column): Column = round(x * scale).cast("long")
     def bucketOf(cents: Column): Column = // floor-division, negative-safe
       floor(cents.cast("double") / col("__W")).cast("long")
-    // one scan: (metric id, cents); per-metric nulls drop independently
+    // one scan: (metric id, cents), plus the round-trip error when strict
     val rows = df
-      .select(posexplode(array(cs.map(c => centsOf(col(c))): _*))
-        .as(Seq("__m", "__cents")))
+      .select(posexplode(array(cs.map { c =>
+        val cents = centsOf(col(c))
+        struct(cents.as("__cents") +: (if (strict)
+          Seq(abs(col(c) - cents.cast("double") / scale).as("__err")) else Nil): _*)
+      }: _*)).as(Seq("__m", "__v")))
+      .select(col("__m"), col("__v.*"))
       .filter(col("__cents").isNotNull)
-    // domainBounded (the single-column form's r18 contract): ONE corpus
-    // pass builds the per-(metric, value) histogram; range, coarse and
-    // refine all run over the domain-bounded distinct-value table
-    val hist = if (!domainBounded) None else Some(
-      rows.groupBy(col("__m"), col("__cents"))
-        .agg(sum(lit(1L)).as("__hcnt")).transform(GraftGlue.materialize(_)))
-    // per-metric adaptive width — a |cs|-row broadcast frame
+    // domainBounded: the ONE corpus pass — per-(metric, value) counts
+    // (plus the per-value max round-trip error when strict, whose
+    // max-of-maxes is the per-metric max the strict gate needs)
+    val hist = if (!domainBounded) None else Some {
+      val aggs = sum(lit(1L)).as("__hcnt") +:
+        (if (strict) Seq(max(col("__err")).as("__err")) else Nil)
+      rows.groupBy(col("__m"), col("__cents")).agg(aggs.head, aggs.tail: _*)
+        .transform(GraftGlue.materialize(_))
+    }
+    // per-metric adaptive width — a |cs|-row broadcast frame. strict:
+    // assert_true is folded INTO the width expression (adding a
+    // coalesced null) so column pruning cannot drop the check
+    val wBase = greatest(lit(minBucketWidth),
+      ceil((col("__cmax") - col("__cmin") + 1).cast("double") / maxCoarseBuckets).cast("long"))
+    val wExpr =
+      if (strict)
+        wBase + coalesce(assert_true(col("__qerr") <= 0.0,
+          concat(lit("exactQuantilesQuantized("), element_at(typedLit(cs), col("__m") + 1),
+            lit(s", scale=$scale): values are not $scale-quantized; max round-trip error "),
+            col("__qerr").cast("string"))).cast("long"), lit(0L))
+      else wBase
+    val statsAggs = max(col("__cents")).as("__cmax") +:
+      (if (strict) Seq(max(col("__err")).as("__qerr")) else Nil)
     val statsW = hist.getOrElse(rows).groupBy(col("__m"))
-      .agg(min(col("__cents")).as("__cmin"), max(col("__cents")).as("__cmax"))
-      .select(col("__m"), greatest(lit(minBucketWidth),
-        ceil((col("__cmax") - col("__cmin") + 1).cast("double") / maxCoarseBuckets)
-          .cast("long")).as("__W"))
-    // coarse histogram per metric; cumulative window PARTITIONED by __m
+      .agg(min(col("__cents")).as("__cmin"), statsAggs: _*)
+      .select(col("__m"), wExpr.as("__W"))
+    // Level 1: coarse histogram per metric. Map-side combine collapses
+    // the scan to ≤ maxCoarseBuckets rows per metric regardless of row
+    // count; the cumulative window is PARTITIONED by __m and runs over
+    // that bounded histogram only. (domainBounded: summed from the value
+    // histogram — no data re-scan)
     val coarse = hist match {
       case Some(h) => h.join(broadcast(statsW), "__m")
         .groupBy(col("__m"), bucketOf(col("__cents")).as("b"), col("__W"))
@@ -292,10 +199,13 @@ object Relational {
       col("__m"), col("b"), col("cnt"), col("__W"),
       sum(col("cnt")).over(wb.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
       sum(col("cnt")).over(wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("n"))
-    def k(q: Double): Column = (col("n") - 1) * lit(q)
+    def k(n: Column, q: Double): Column = (n - 1) * lit(q)
+    // For each quantile, the bucket holding global rank r (1-based) and
+    // the count of rows strictly before that bucket. cum and cum-cnt are
+    // both increasing in b, so min-over-eligible picks the first bucket.
     val targetAggs = qs.zipWithIndex.flatMap { case (q, i) =>
-      val r0 = floor(k(q)) + 1
-      val r1 = ceil(k(q)) + 1
+      val r0 = floor(k(col("n"), q)) + 1
+      val r1 = ceil(k(col("n"), q)) + 1
       Seq(min(when(col("cum") >= r0, col("b"))).as(s"b0_$i"),
           min(when(col("cum") >= r0, col("cum") - col("cnt"))).as(s"below0_$i"),
           min(when(col("cum") >= r1, col("b"))).as(s"b1_$i"),
@@ -303,8 +213,13 @@ object Relational {
     }
     val targets = cumc.groupBy(col("__m"))
       .agg(max(col("n")).as("n"), min(col("__W")).as("__W") +: targetAggs: _*)
-    // refine inside each metric's ≤ 2·|qs| target buckets
-    // (domainBounded: the value histogram IS the refine table)
+    // Level 2: refine only inside each metric's (≤ 2·|qs|) target
+    // buckets. The per-bucket distinct-value histogram is bounded by W
+    // rows, so the partitioned cumulative window and final pick are
+    // O(|cs|·|qs|·W) however skewed the data is (an all-ties column
+    // compresses to one row). (domainBounded: the value histogram IS the
+    // per-value refine table — filter it to the target buckets, no third
+    // data pass)
     val isTarget = qs.indices
       .map(i => bucketOf(col("v")) === col(s"b0_$i") || bucketOf(col("v")) === col(s"b1_$i"))
       .reduce(_ || _)
@@ -325,29 +240,30 @@ object Relational {
       .withColumn("fcum", sum(col("cnt")).over(
         Window.partitionBy(col("__m"), bucketOf(col("v"))).orderBy(col("v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val pickAggs = qs.zipWithIndex.flatMap { case (q, i) =>
-      val r0 = floor(k(q)) + 1
-      val r1 = ceil(k(q)) + 1
-      Seq(
-        min(when(bucketOf(col("v")) === col(s"b0_$i") &&
-          col(s"below0_$i") + col("fcum") >= r0, col("v"))).as(s"v0_$i"),
-        min(when(bucketOf(col("v")) === col(s"b1_$i") &&
-          col(s"below1_$i") + col("fcum") >= r1, col("v"))).as(s"v1_$i"))
+    // one global aggregate picks every metric's bracketing values: a
+    // refine row only competes for its own metric's slots
+    val pickAggs = cs.indices.flatMap { m =>
+      val isM = col("__m") === m
+      max(when(isM, col("n"))).as(s"n_$m") +: qs.zipWithIndex.flatMap { case (q, i) =>
+        val r0 = floor(k(col("n"), q)) + 1
+        val r1 = ceil(k(col("n"), q)) + 1
+        Seq(
+          min(when(isM && bucketOf(col("v")) === col(s"b0_$i") &&
+            col(s"below0_$i") + col("fcum") >= r0, col("v"))).as(s"v0_${m}_$i"),
+          min(when(isM && bucketOf(col("v")) === col(s"b1_$i") &&
+            col(s"below1_$i") + col("fcum") >= r1, col("v"))).as(s"v1_${m}_$i"))
+      }
     }
-    val picked = fine.groupBy(col("__m")).agg(max(col("n")).as("n"), pickAggs: _*)
-    // fold the |cs|-row frame to the single wide row (one tiny agg —
-    // no driver collect)
-    val perMetric = picked.select(col("__m") +: qs.zipWithIndex.map { case (q, i) =>
-      val frac = k(q) - floor(k(q))
-      val v0 = col(s"v0_$i").cast("double") / scale.toDouble
-      val v1 = col(s"v1_$i").cast("double") / scale.toDouble
-      (v0 + frac * (v1 - v0)).as(s"p$i")
+    val picked = fine.agg(pickAggs.head, pickAggs.tail: _*)
+    picked.select(cs.zipWithIndex.flatMap { case (c, m) =>
+      qs.zipWithIndex.map { case (q, i) =>
+        val kq = k(col(s"n_$m"), q)
+        val frac = kq - floor(kq)
+        val v0 = col(s"v0_${m}_$i").cast("double") / scale.toDouble
+        val v1 = col(s"v1_${m}_$i").cast("double") / scale.toDouble
+        (v0 + frac * (v1 - v0)).as(s"${c}_p$i")
+      }
     }: _*)
-    perMetric.agg(
-      cs.zipWithIndex.flatMap { case (c, m) => qs.indices.map(i =>
-        max(when(col("__m") === m, col(s"p$i"))).as(s"${c}_p$i")) }.head,
-      cs.zipWithIndex.flatMap { case (c, m) => qs.indices.map(i =>
-        max(when(col("__m") === m, col(s"p$i"))).as(s"${c}_p$i")) }.tail: _*)
   }
 
   /** Single-row frame of interquartile bounds for `c` (exact quantiles,
@@ -367,15 +283,12 @@ object Relational {
       .select((col("q1") - lit(factor) * (col("q3") - col("q1"))).as("lo"),
               (col("q3") + lit(factor) * (col("q3") - col("q1"))).as("hi"))
 
-  /** P8 — IQR outlier filter (featureEngineering.ipynb cell 20;
-    * 1_EDA_Dashboard.py:141-148). The bounds row is broadcast, not
-    * collected: one aggregate job + one narrow filtered scan. */
   /** Exact DOUBLED median per group of an integral column: med2 =
     * c[⌈n/2⌉] + c[⌈(n+1)/2⌉] over the group's sorted values (= 2·median
     * for odd n, lo+hi for even n) — an exact BIGINT, so no engine's
     * interpolation arithmetic is ever compared (the q133 house rule).
     *
-    * Shape — the GROUPED form of [[exactQuantilesQuantized]]'s two-level
+    * Shape — the GROUPED form of [[exactQuantilesQuantizedMulti]]'s two-level
     * rank selection, with deterministic coarse buckets instead of
     * sampled range partitions (no checkpoint, no materialization):
     * distinct-value histogram (hash agg, map-side combined); per-group
@@ -578,6 +491,9 @@ object Relational {
     out.toDF(g, "med2", "n")
   }
 
+  /** P8 — IQR outlier filter (featureEngineering.ipynb cell 20;
+    * 1_EDA_Dashboard.py:141-148). The bounds row is broadcast, not
+    * collected: one aggregate job + one narrow filtered scan. */
   def iqrFilter(df: DataFrame, c: String, factor: Double = 1.5,
                 domainBounded: Boolean = false): DataFrame =
     df.crossJoin(broadcast(iqrBounds(df, c, factor, domainBounded = domainBounded)))

@@ -18,7 +18,7 @@ object Selection {
     *
     * Scale shape — the naive form is a global sort + running sum (one
     * partition); this instead mirrors the two-level rank-selection of
-    * [[Relational.exactQuantilesQuantized]]:
+    * [[Relational.exactQuantilesQuantizedMulti]]:
     *
     *   1. aggregate weight per DISTINCT score (hash aggregate; shuffle
     *      carries one row per distinct score, which quantized scores —

@@ -46,18 +46,6 @@ object TextSketch {
     s.read.parquet(path)
   }
 
-  /** The SUBSTRING twin (doc_id, pos, wh): every document's stride-1
-    * width-40 window md5s — exactly the rows
-    * [[graft.streaming.StreamPipeline.substringScrubWriter]] persists
-    * as its index at ingest, materialized once for the batch
-    * consumers: q273's excision, q274's keeper-restricted dedup-first
-    * composition, and BOTH sides of q282's decontamination (corpus and
-    * bench are row-subsets of the one table). Windows are per-doc, so
-    * any doc-subset restriction equals a fresh derivation over the
-    * subset. q275/q280 stay on the LIVE rolling-hash engine by design
-    * (the O(n) production path is the thing under test), and the
-    * oracles re-derive every window md5 from the text — the store is
-    * validated end-to-end each round. */
   /** The CDC-CHUNK table (doc_id, chunk_idx, start, chunk_len,
     * chunk_md5) at the house (w = 8, den = 64) scheme — content-defined
     * chunking IS an ingest-time operation (chunk once, N analyses:
@@ -136,6 +124,18 @@ object TextSketch {
     s.read.parquet(path)
   }
 
+  /** The SUBSTRING twin (doc_id, pos, wh): every document's stride-1
+    * width-40 window md5s — exactly the rows
+    * [[graft.streaming.StreamPipeline.substringScrubWriter]] persists
+    * as its index at ingest, materialized once for the batch
+    * consumers: q273's excision, q274's keeper-restricted dedup-first
+    * composition, and BOTH sides of q282's decontamination (corpus and
+    * bench are row-subsets of the one table). Windows are per-doc, so
+    * any doc-subset restriction equals a fresh derivation over the
+    * subset. q275/q280 stay on the LIVE rolling-hash engine by design
+    * (the O(n) production path is the thing under test), and the
+    * oracles re-derive every window md5 from the text — the store is
+    * validated end-to-end each round. */
   def substringWh(s: SparkSession, d: String): DataFrame = {
     // wh carries graft.scheme = substr_w40 (see winnowFps's note)
     val path = Store.dir(s, d, Seq("documents"), "substring_wh_w40_m1") { tmp =>

@@ -139,11 +139,11 @@ class RelationalOpsSpec extends SparkSpec {
     }
   }
 
-  test("multi-column quantiles equal the single-column engine per column") {
+  test("multi-column quantiles equal buffer-all percentile per column") {
     // the q226 shape: three metrics with wildly different ranges and
     // distributions (negatives, ties, a wide-range column) through ONE
-    // three-pass build — must equal three independent single-column
-    // builds value-for-value
+    // three-pass build — each column must equal Spark's exact
+    // percentile value-for-value
     val rnd = new scala.util.Random(11)
     val df = Seq.tabulate(500)(i => (
       (i % 37).toDouble - 18.0,                       // ties + negatives
@@ -154,11 +154,11 @@ class RelationalOpsSpec extends SparkSpec {
     val multi = Relational.exactQuantilesQuantizedMulti(
       df, Seq("a", "b", "c"), qs).collect()(0)
     for (c <- Seq("a", "b", "c")) {
-      val single = Relational.exactQuantilesQuantized(df, c, qs).collect()(0)
+      val exact = df.agg(percentile(col(c), array(qs.map(lit): _*)))
+        .as[Seq[Double]].collect()(0)
       qs.indices.foreach { i =>
-        assert(multi.getAs[Double](s"${c}_p$i") == single.getAs[Double](s"p$i"),
-          s"$c p$i: multi=${multi.getAs[Double](s"${c}_p$i")} " +
-            s"single=${single.getAs[Double](s"p$i")}")
+        assert(multi.getAs[Double](s"${c}_p$i") == exact(i),
+          s"$c p$i: multi=${multi.getAs[Double](s"${c}_p$i")} exact=${exact(i)}")
       }
     }
     // per-column nulls drop independently (a null in one metric must
@@ -272,6 +272,18 @@ class RelationalOpsSpec extends SparkSpec {
       Seq(1.25, 2.5, 3.75).toDF("x"), "x", Seq(0.5), strict = true)
       .as[Double].collect()(0)
     assert(cleanR == 2.5)
+    // through the multi-column engine: the error names the lossy column,
+    // and the clean column alone passes
+    val two = Seq((1.25, 1.001), (2.5, 2.0), (3.75, 3.0)).toDF("clean", "lossy")
+    val em = intercept[Exception] {
+      Relational.exactQuantilesQuantizedMulti(two, Seq("clean", "lossy"),
+        Seq(0.5), strict = true).collect()
+    }
+    assert(em.getMessage.contains("exactQuantilesQuantized(lossy, scale=100): " +
+      "values are not 100-quantized"), em.getMessage)
+    val cleanM = Relational.exactQuantilesQuantizedMulti(two, Seq("clean"),
+      Seq(0.5), strict = true).collect()(0)
+    assert(cleanM.getAs[Double]("clean_p0") == 2.5)
   }
 
   test("groupedMedian2 matches the sorted-values definition in every regime") {
